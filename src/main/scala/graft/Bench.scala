@@ -166,6 +166,18 @@ object Bench {
     spark.catalog.clearCache()
   }
 
+  /** Per-query task seconds from the committed baseline file. The gate
+    * is advisory: a token that is not a number (`1.2.3`) is dropped, not
+    * fatal. */
+  private[graft] def parseBaseline(txt: String): Map[String, Double] =
+    "\"([^\"]+)\"\\s*:\\s*(-?[0-9.]+(?:[eE][+-]?[0-9]+)?)".r
+      .findAllMatchIn(txt)
+      .flatMap(m => m.group(2).toDoubleOption.map(m.group(1) -> _)).toMap
+
+  /** `v` as the body of a JSON string literal. */
+  private[graft] def jsonEscape(v: String): String =
+    v.replace("\\", "\\\\").replace("\"", "\\\"")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -253,12 +265,9 @@ object Bench {
       "bench_task_baseline.json")
     val baseline: Map[String, Double] = {
       val p = java.nio.file.Path.of(baselinePath)
-      if (java.nio.file.Files.isReadable(p)) {
-        val txt = java.nio.file.Files.readString(p)
-        "\"([^\"]+)\"\\s*:\\s*(-?[0-9.]+(?:[eE][+-]?[0-9]+)?)".r
-          .findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } else Map.empty
+      if (java.nio.file.Files.isReadable(p))
+        parseBaseline(java.nio.file.Files.readString(p))
+      else Map.empty
     }
     val taskRegressions = taskSecs.toSeq.flatMap { case (n, t) =>
       baseline.get(n) match {
@@ -292,9 +301,9 @@ object Bench {
     val json = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""queries":$qs,"queries_job":$jq,"queries_task":$tq,""" +
       s""""queries_job_key":"$jobKey",""" +
-      s""""task_baseline":"${if (baseline.isEmpty) "" else baselinePath}",""" +
+      s""""task_baseline":"${if (baseline.isEmpty) "" else jsonEscape(baselinePath)}",""" +
       s""""task_regressions":$trj,""" +
-      s""""queries_job_incomplete":$jinc,"errors":$errs,"sf":"$sfDir"}"""
+      s""""queries_job_incomplete":$jinc,"errors":$errs,"sf":"${jsonEscape(sfDir)}"}"""
     // full payload first in the log, and always in a file: the
     // driver's log-tail parse only sees the LAST ~2000 chars, which a
     // 250-query map overflows — that full map lives here
@@ -317,7 +326,7 @@ object Bench {
       s""""n_queries":${results.length},"median":${r3(median)},""" +
       s""""n_errors":${errors.size},"queries":$top,""" +
       s""""n_task_regressions":${taskRegressions.length},""" +
-      s""""queries_full":"$outFile","sf":"$sfDir"}""")
+      s""""queries_full":"${jsonEscape(outFile.toString)}","sf":"${jsonEscape(sfDir)}"}""")
     if (taskRegressions.nonEmpty)
       System.err.println("[bench] task-time regressions vs committed " +
         s"baseline (>1.5x): ${taskRegressions.take(20).map {

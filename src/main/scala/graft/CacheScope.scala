@@ -26,6 +26,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Releasing between queries bounds cached storage by one query's
   * working set instead of growing monotonically until eviction
   * pressure (the failure mode in a 1000-executor long-running driver).
+  *
+  * One documented exception survives `release`: the session's pinned
+  * customer⇄supplier graph (`operators.Graph.csGraph`, at most one per
+  * session). The PPR, PageRank, HITS and components loops over that
+  * graph all read the same structure, and rebuilding it per query cost
+  * 30-50% of each of them. It is not tracked here; a new key (session,
+  * dir, or the identity of the lineitem/orders files) unpersists and
+  * rebuilds it, and so does the next graph query after
+  * `catalog.clearCache()` or an unpersist of its cached RDDs.
   */
 object CacheScope {
   private val tracked =

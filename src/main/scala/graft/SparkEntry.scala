@@ -47,9 +47,7 @@ object SparkEntry {
     // component sizes of the customer⇄supplier graph; recursive-CTE
     // closure oracle + union-find oracle in GraphSpec
     "graph_components" -> ((s, d) =>
-      Graph.connectedComponents(
-          Graph.customerSupplierEdges(s, d, distinctPairs = false),
-          symmetric = true)
+      Graph.csComponents(s, d)
         .groupBy(col("comp")).agg(org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.lit(1)).as("size"))),
     "percentiles" -> ((s, d) => Relational.pricePercentiles(s, d)),

@@ -1,7 +1,21 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.storage.StorageLevel
 import graft.operators.Graph
 
 /** In-memory sequential oracle with the reference's semantics
@@ -28,8 +42,78 @@ object SeqPPR {
   }
 }
 
+/** What the cluster did while a body ran: jobs started, stages that
+  * read files, and the executed plan of every query execution (actions
+  * and checkpoints). */
+final class JobProbe extends SparkListener with QueryExecutionListener {
+  val jobs = new AtomicInteger
+  val fileScanStages = new AtomicInteger
+  val plans = new ConcurrentLinkedQueue[SparkPlan]
+  private val open = new AtomicInteger
+  private val lastEvent = new AtomicLong(System.nanoTime())
+  private def touch(): Unit = lastEvent.set(System.nanoTime())
+
+  override def onJobStart(j: SparkListenerJobStart): Unit = {
+    jobs.incrementAndGet(); open.incrementAndGet(); touch()
+  }
+  override def onJobEnd(j: SparkListenerJobEnd): Unit = {
+    open.decrementAndGet(); touch()
+  }
+  override def onStageCompleted(st: SparkListenerStageCompleted): Unit = {
+    if (st.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+      fileScanStages.incrementAndGet()
+    touch()
+  }
+  override def onOtherEvent(e: SparkListenerEvent): Unit = touch()
+  override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+    plans.add(qe.executedPlan); touch()
+  }
+  override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+    touch()
+
+  /** Runs `body` with this probe attached; returns once every job it
+    * started has ended and the buses have been quiet for 300 ms. */
+  def run(spark: SparkSession)(body: => Unit): this.type = {
+    spark.sparkContext.addSparkListener(this)
+    spark.listenerManager.register(this)
+    try {
+      body
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while ((open.get > 0 || System.nanoTime() - lastEvent.get < 300L * 1000000L) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    } finally {
+      spark.listenerManager.unregister(this)
+      spark.sparkContext.removeSparkListener(this)
+    }
+    this
+  }
+}
+
+object PlanShape extends AdaptiveSparkPlanHelper {
+  /** Broadcast exchanges whose subtree reads a cached relation. */
+  def broadcastsOfCached(plan: SparkPlan): Int =
+    collectWithSubqueries(plan) { case b: BroadcastExchangeLike => b }
+      .count(b => collect(b) { case i: InMemoryTableScanExec => i }.nonEmpty)
+}
+
 class GraphSpec extends SparkSpec {
   import spark.implicits._
+
+  /** A lineitem/orders fixture of `(orderkey, suppkey, custkey)` rows in
+    * `dir`, overwriting any earlier one. */
+  private def writeFixture(dir: String, rows: Seq[(Long, Long, Long)]): Unit = {
+    rows.map(r => (r._1, r._2)).toDF("l_orderkey", "l_suppkey")
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    rows.map(r => (r._1, r._3)).distinct.toDF("o_orderkey", "o_custkey")
+      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+  }
+
+  private def tempDir(): String =
+    java.nio.file.Files.createTempDirectory("graphspec").toString
+
+  private def componentSizes(s: SparkSession, dir: String): Seq[Long] =
+    Graph.csComponents(s, dir).groupBy("comp").count()
+      .collect().map(_.getLong(1)).toSeq.sorted
 
   val smallEdges: Seq[(Long, Long)] =
     Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 4L), (5L, 1L))
@@ -181,5 +265,85 @@ class GraphSpec extends SparkSpec {
     assert(got.getLong(0) == 51L, "n_edges")
     assert(got.getLong(1) == 1L, s"oriented wedge volume, got ${got.getLong(1)}")
     assert(got.getLong(2) == 1L, "n_triangles")
+  }
+
+  test("one job per loop round, no broadcast of the pinned graph") {
+    Graph.csGraph(spark, sf) // pinned before the counting starts
+    def jobs(q: Int => Unit, rounds: Int): JobProbe =
+      new JobProbe().run(spark)(q(rounds))
+    val loops = Seq[(String, Int => Unit)](
+      "pagerank_global" -> (r => Graph.pagerankGlobal(spark, sf, rounds = r).collect()),
+      "ppr_top10" -> (r => Graph.pprTopK(spark, sf, Seq(1L, 2L), r, 10).collect()),
+      "hits_scores" -> (r => Graph.hits(spark, sf, rounds = r).collect()))
+    loops.foreach { case (name, q) =>
+      val (a, b) = (jobs(q, 2), jobs(q, 3))
+      assert(b.jobs.get - a.jobs.get == 1,
+        s"$name: ${a.jobs.get} jobs at 2 rounds, ${b.jobs.get} at 3")
+      val plans = b.plans.asScala.toSeq
+      assert(plans.size > 3, s"$name: only ${plans.size} plans seen")
+      assert(plans.map(PlanShape.broadcastsOfCached).sum == 0,
+        s"$name broadcasts a cached relation")
+    }
+  }
+
+  test("a second graph query reads the pinned graph, not lineitem/orders") {
+    spark.catalog.clearCache()
+    val first = new JobProbe().run(spark)(Graph.pagerankGlobal(spark, sf).collect())
+    assert(first.fileScanStages.get > 0, "the probe must see the build's scans")
+    Seq[() => Unit](
+      () => Graph.pprTopK(spark, sf, Seq(1L, 2L), 8, 10).collect(),
+      () => Graph.hits(spark, sf).collect(),
+      () => Graph.csComponents(spark, sf, driverCutoff = 0).collect()).foreach { q =>
+      val p = new JobProbe().run(spark)(q())
+      assert(p.fileScanStages.get == 0,
+        s"${p.fileScanStages.get} file-scan stages after the graph was pinned")
+    }
+  }
+
+  test("the pinned graph is rebuilt after clearCache, an RDD unpersist, a rewrite, a new session") {
+    val dir = tempDir()
+    writeFixture(dir, Seq((1L, 1L, 10L), (2L, 2L, 20L), (3L, 1L, 30L)))
+    val g1 = Graph.csGraph(spark, dir)
+    assert(Graph.csGraph(spark, dir) eq g1, "reused within the session")
+    assert(componentSizes(spark, dir) == Seq(2L, 3L))
+
+    spark.catalog.clearCache()
+    val g2 = Graph.csGraph(spark, dir)
+    assert(g2 ne g1)
+    assert(g2.edges.storageLevel != StorageLevel.NONE &&
+      g2.vertices.storageLevel != StorageLevel.NONE, "rebuilt pinned")
+
+    // an RDD-level sweep leaves the CacheManager entry but drops its blocks
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    val g2b = Graph.csGraph(spark, dir)
+    assert(g2b ne g2)
+    assert(Graph.csGraph(spark, dir) eq g2b, "the rebuilt graph is reused")
+
+    // order 3 moves to customer 20: one component of all four vertices
+    writeFixture(dir, Seq((1L, 1L, 10L), (2L, 2L, 20L), (3L, 1L, 20L)))
+    val g3 = Graph.csGraph(spark, dir)
+    assert(g3 ne g2b)
+    assert(componentSizes(spark, dir) == Seq(4L))
+
+    val other = spark.newSession()
+    assert(Graph.csGraph(other, dir) ne Graph.csGraph(spark, dir))
+    assert(componentSizes(other, dir) == Seq(4L))
+  }
+
+  test("custkey >= supplierOffset fails loudly instead of colliding") {
+    val dir = tempDir()
+    writeFixture(dir, Seq((1L, 1L, 10L), (2L, 2L, 2000000L)))
+    val e1 = intercept[IllegalArgumentException](Graph.csGraph(spark, dir))
+    assert(e1.getMessage.contains("supplierOffset"))
+    intercept[IllegalArgumentException](Graph.twoHopReach(spark, dir))
+  }
+
+  test("components loop over the pinned edges matches union-find") {
+    val distributed = Graph.csComponents(spark, sf, driverCutoff = 0)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val driver = Graph.csComponents(spark, sf)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(Graph.csGraph(spark, sf).nEdges <= 10000, "fixture takes the driver path")
+    assert(distributed == driver)
   }
 }
