@@ -31,7 +31,13 @@ import graft.{CacheScope, Tables}
   * ([[csGraph]] says what invalidates it). Per-round joins hint the
   * VECTOR side `shuffle_hash`, so the cached structure, small enough to
   * broadcast, is never re-shipped by a broadcast job each round. The
-  * other queries over this graph still build their own edge copies.
+  * other loops over this graph build their own edge copies, and
+  * [[edgeLoop]] is the one place their policy lives: cache and count
+  * the raw edges once (checking the supplier offset in the same job),
+  * size the partitions from that count, pin the loop's conf, and hand
+  * the rounds one copy hash-partitioned on their join key. salsa (two
+  * pinned copies of the one-way half) and vote_rank (sized from half
+  * its edges) still decide on their own.
   *
   * The two loops sit at different layers, each chosen by measurement:
   *  - PPR iterates DataFrames — its per-vertex state is a wide row of
@@ -443,7 +449,7 @@ object Graph {
     * — drop or sample whale customers above a degree cut, same skew
     * treatment as the salted joins). An in-partition pair-expansion
     * variant (collect_set + nested transform, no self-join) measured
-    * 1.7× SLOWER warm at sf0.1 (`tools.NjProbe`): array allocation
+    * 1.7× SLOWER warm at sf0.1: array allocation
     * cost exceeds the join's shuffle savings at these set sizes.
     */
   def neighborJaccard(s: SparkSession, dir: String,
@@ -475,13 +481,12 @@ object Graph {
     * through an order. Supplier ids are offset to avoid key collision.
     */
   def customerSupplierEdges(s: SparkSession, dir: String,
-                            supplierOffset: Long = SupplierOffset,
                             distinctPairs: Boolean = true): DataFrame = {
     val li = Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey")
     val o = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
     val pairs0 = li.join(o, col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("c"),
-        (col("l_suppkey") + supplierOffset).as("sup"))
+        (col("l_suppkey") + SupplierOffset).as("sup"))
     // PPR needs exact edge multiplicity (duplicates skew out-degrees),
     // but the components loop dedupes in-partition anyway — skipping
     // the distinct there removes a full shuffle of the edge table
@@ -519,6 +524,43 @@ object Graph {
       s"custkey $maxC >= supplierOffset $SupplierOffset: customer and " +
         "supplier ids collide in the customer⇄supplier graph")
     n
+  }
+
+  /** What [[edgeLoop]] hands its body: the loop's edges and their
+    * count. */
+  private final class LoopEdges(val edges: DataFrame, val nEdges: Long) {
+    /** `(id)`, one row per vertex (the edges are symmetric, so every
+      * vertex is a src), cached and counted on first use: round 1 reads
+      * it from two subtrees. */
+    lazy val vertices: DataFrame = CacheScope.register(
+      edges.select(col("src").as("id")).distinct().persist())
+  }
+
+  /** The one place the customer⇄supplier loops that build their own
+    * edges pin, size and configure themselves. `raw` (symmetric `src,
+    * dst` edges) is cached and counted in one job that also checks the
+    * supplier offset ([[checkedCount]]); the loop's partition count is
+    * [[loopParallelism]] of that count and `body` runs inside
+    * [[withLoopConf]]. With a `key`, the body reads one copy
+    * hash-partitioned on it, registered with [[CacheScope]], and the raw
+    * cache is dropped: a scan-partitioned cache made every round's join
+    * re-exchange the whole edge table (StageProbe: 6 × 1.17M-row
+    * exchanges per katz query at sf0.1). Without a key it reads the raw
+    * cache. Row movement only; no value changes. */
+  private def edgeLoop[A](raw: DataFrame, key: Option[String] = None)(
+      body: LoopEdges => A): A = {
+    val s = raw.sparkSession
+    val e = CacheScope.track(raw.persist())
+    val n = checkedCount(e)
+    val p = loopParallelism(s, n)
+    withLoopConf(s, p) {
+      val edges = key.fold(e) { k =>
+        val pinned = CacheScope.register(e.repartition(p, col(k)).persist())
+        e.unpersist()
+        pinned
+      }
+      body(new LoopEdges(edges, n))
+    }
   }
 
   /** The pinned customer⇄supplier graph: distinct symmetric `edges(src,
@@ -714,24 +756,18 @@ object Graph {
     * under both endpoint joins) and the scheduler's lineage flat.
     */
   def kCore(s: SparkSession, dir: String, k: Int = 3,
-            rounds: Int = 6): DataFrame = {
-    val e = customerSupplierEdges(s, dir)
-      .select(col("src"), col("dst")).persist()
-    graft.CacheScope.register(e) // eager: every round reads it twice
-    // the active set is a bare id column and shrinks monotonically —
-    // broadcast BOTH membership probes so the edge list never shuffles
-    // (two hash-lookups per edge per round instead of two exchanges of
-    // |E|). At a scale where the vertex set outgrows a broadcast
-    // (~100M+ ids), drop the hint: the joins fall back to shuffles on
-    // src/dst, still equality-keyed.
-    def restrict(act: DataFrame): DataFrame = e
-      .join(broadcast(act.select(col("id").as("src"))), "src")
-      .join(broadcast(act.select(col("id").as("dst"))), "dst")
-    // pinned loop parallelism (same regime as the PPR loop): each
-    // round's joins/aggs shuffle narrow id rows, so near-empty
-    // default-count partitions make scheduling dominate the round
-    val p = loopParallelism(s, e.count())
-    withLoopConf(s, p) {
+            rounds: Int = 6): DataFrame =
+    edgeLoop(customerSupplierEdges(s, dir)) { g =>
+      // the active set is a bare id column and shrinks monotonically —
+      // broadcast BOTH membership probes so the edge list never
+      // shuffles (two hash-lookups per edge per round instead of two
+      // exchanges of |E|). At a scale where the vertex set outgrows a
+      // broadcast (~100M+ ids), drop the hint: the joins fall back to
+      // shuffles on src/dst, still equality-keyed.
+      val e = g.edges
+      def restrict(act: DataFrame): DataFrame = e
+        .join(broadcast(act.select(col("id").as("src"))), "src")
+        .join(broadcast(act.select(col("id").as("dst"))), "dst")
       var active = e.select(col("src").as("id")).distinct().localCheckpoint()
       for (_ <- 1 to rounds) {
         active = restrict(active)
@@ -743,7 +779,6 @@ object Graph {
       restrict(active).groupBy(col("src").as("id"))
         .agg(count(lit(1)).as("core_deg"))
     }
-  }
 
   /** HITS hubs & authorities (Kleinberg) over the DIRECTED
     * customer→supplier half of the bipartite graph: `rounds`
@@ -817,7 +852,7 @@ object Graph {
   def adamicAdar(s: SparkSession, dir: String, k: Int = 50,
                  degCap: Int = 64): DataFrame = {
     val adj = customerSupplierEdges(s, dir)
-      .filter(col("src") < lit(1000000L))
+      .filter(col("src") < SupplierOffset)
       .select(col("src").as("c"), col("dst").as("sup"))
     val deg = adj.groupBy("c").agg(count(lit(1)).as("deg"))
       .filter(col("deg").between(2, degCap))
@@ -852,35 +887,21 @@ object Graph {
     * otherwise replay the whole prefix and double the plan per round.
     */
   def labelPropagation(s: SparkSession, dir: String, rounds: Int = 3,
-                       k: Int = 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val e = customerSupplierEdges(s, dir).persist()
-    CacheScope.register(e) // eager: one join per round reads it
-    // pinned loop parallelism (PPR regime): the per-round join/agg/
-    // window all move narrow (id, lbl) rows — near-empty default-count
-    // partitions would make scheduling dominate every round
-    val p = loopParallelism(s, e.count())
-    withLoopConf(s, p) {
-      labelPropAssign(e, rounds)
+                       k: Int = 20): DataFrame =
+    edgeLoop(customerSupplierEdges(s, dir), Some("dst")) { g =>
+      labelPropAssign(g.edges, rounds)
         .groupBy(col("lbl").as("community"))
         .agg(count(lit(1)).as("members"))
         .orderBy(col("members").desc, col("community"))
         .limit(k)
     }
-  }
 
   /** The label-propagation loop itself: (id, lbl) after `rounds`
-    * deterministic modal-label rounds — shared by [[labelPropagation]]
-    * and [[modularity]]. Caller pins loop parallelism.
+    * deterministic modal-label rounds over `ed`, the [[edgeLoop]] edges
+    * pinned on dst — shared by [[labelPropagation]] and [[modularity]].
     */
-  private def labelPropAssign(e: DataFrame, rounds: Int): DataFrame = {
+  private def labelPropAssign(ed: DataFrame, rounds: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // pin the loop's edge copy onto hash(dst) partitions once (r12,
-    // guide §2.4 — see katzCentrality): the caller's scan-partitioned
-    // cache re-exchanged the full edge table every round (StageProbe:
-    // 5 × 1.17M-row exchanges per query at sf0.1). Row movement only.
-    val ed = graft.CacheScope.register(
-      e.select(col("src"), col("dst")).repartition(col("dst")).persist())
     var lab = ed.select(col("src").as("id")).distinct()
       .withColumn("lbl", col("id")).localCheckpoint()
     for (_ <- 1 to rounds) {
@@ -909,14 +930,11 @@ object Graph {
     * order-free sum. Two keyed joins of the edge list against the
     * (id → label) table; nothing quadratic.
     */
-  def modularity(s: SparkSession, dir: String, rounds: Int = 3): DataFrame = {
-    val e = customerSupplierEdges(s, dir).persist()
-    CacheScope.register(e) // eager: the loop + both modularity joins
-    val p = loopParallelism(s, e.count())
-    withLoopConf(s, p) {
-      val lab = labelPropAssign(e, rounds).persist()
-      CacheScope.register(lab)
-      val de = e.count()
+  def modularity(s: SparkSession, dir: String, rounds: Int = 3): DataFrame =
+    edgeLoop(customerSupplierEdges(s, dir), Some("dst")) { g =>
+      val e = g.edges
+      val lab = CacheScope.register(labelPropAssign(e, rounds).persist())
+      val de = g.nEdges
       val intra = e
         .join(lab.select(col("id").as("src"), col("lbl").as("ls")), "src")
         .join(lab.select(col("id").as("dst"), col("lbl").as("ld")), "dst")
@@ -937,7 +955,6 @@ object Graph {
           (floor(col("qsum").cast("double") / lit(1e12) * lit(1e6) +
             lit(0.5)) / lit(1e6)).as("modularity"))
     }
-  }
 
   /** Distinct 2-hop reach per vertex: how many OTHER vertices are
     * reachable in exactly ≤2 undirected hops — the neighborhood-size
@@ -1136,21 +1153,10 @@ object Graph {
   }
 
   def bfsDistances(s: SparkSession, dir: String, source: Long,
-                   maxHops: Int = 4): DataFrame = {
-    val e = customerSupplierEdges(s, dir)
-      .select(col("src"), col("dst")).persist()
-    graft.CacheScope.register(e) // eager: every hop joins it
-    val p = loopParallelism(s, e.count())
-    withLoopConf(s, p) {
-      // pin the loop's edge cache onto hash(src, p) once (r12, guide
-      // §2.4 — see katzCentrality): the scan-partitioned cache
-      // re-exchanged the full edge table every hop (StageProbe)
-      val ed = graft.CacheScope.register(
-        e.repartition(p, col("src")).persist())
-      e.unpersist()
-      frontierLoop(ed, Seq(source), maxHops).select("id", "dist")
+                   maxHops: Int = 4): DataFrame =
+    edgeLoop(customerSupplierEdges(s, dir), Some("src")) { g =>
+      frontierLoop(g.edges, Seq(source), maxHops).select("id", "dist")
     }
-  }
 
   /** HyperANF neighborhood function + effective diameter (W549 —
     * Boldi/Rosa/Vigna, WWW'11): per-node HLL registers approximate
@@ -1271,7 +1277,7 @@ object Graph {
       .select(col("c_custkey").cast("long").as("id"),
         col("c_nationkey").cast("long").as("grp"))
       .unionAll(Tables.supplier(s, dir)
-        .select((col("s_suppkey") + lit(1000000L)).as("id"),
+        .select((col("s_suppkey") + SupplierOffset).as("id"),
           col("s_nationkey").cast("long").as("grp")))
     val tagged = e
       .join(nodeGrp.select(col("id").as("src"), col("grp").as("sgrp")),
@@ -1395,18 +1401,14 @@ object Graph {
     */
   def weightedPpr(s: SparkSession, dir: String, source: Long = 1L,
                   rounds: Int = 6, alpha: Double = 0.15,
-                  k: Int = 20): DataFrame = {
-    val e = CacheScope.track(
-      customerSupplierEdges(s, dir, distinctPairs = false)
-        .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-        .persist())
-    val p = loopParallelism(s, e.count())
-    withLoopConf(s, p) {
+                  k: Int = 20): DataFrame =
+    edgeLoop(customerSupplierEdges(s, dir, distinctPairs = false)
+        .groupBy("src", "dst").agg(count(lit(1)).as("w"))) { g =>
+      val e = g.edges
       val outw = e.groupBy("src").agg(sum("w").as("wout"))
       val struct0 = CacheScope.track(
         e.join(outw.hint("shuffle_hash"), "src").persist())
-      val nodes = CacheScope.register( // eager (r11): round 1 reads it
-        e.select(col("src").as("id")).distinct().persist()) // from 2 subtrees
+      val nodes = g.vertices
       var ranks = nodes.select(col("id"),
         when(col("id") === source, 1.0).otherwise(0.0).as("r"))
       // checkpoint EVERY round (r12 revert of the r11 every-2nd-round
@@ -1430,7 +1432,6 @@ object Graph {
         .limit(k)
         .select(col("id"), round(col("r"), 9).as("rank"))
     }
-  }
 
   /** Sampled eccentricity: per source in `sources`, the max BFS
     * distance reached within `maxHops` and the vertex count at each
@@ -1443,23 +1444,12 @@ object Graph {
     */
   def eccentricitySample(s: SparkSession, dir: String,
                          sources: Seq[Long] = Seq(1L, 2L, 3L),
-                         maxHops: Int = 4): DataFrame = {
-    val e = customerSupplierEdges(s, dir)
-      .select(col("src"), col("dst")).persist()
-    graft.CacheScope.register(e) // eager: every hop joins it
-    val p = loopParallelism(s, e.count())
-    withLoopConf(s, p) {
-      // pin the loop's edge cache onto hash(src, p) once (r12, guide
-      // §2.4 — see katzCentrality): the scan-partitioned cache
-      // re-exchanged the full edge table every hop (StageProbe)
-      val ed = graft.CacheScope.register(
-        e.repartition(p, col("src")).persist())
-      e.unpersist()
-      frontierLoop(ed, sources, maxHops)
+                         maxHops: Int = 4): DataFrame =
+    edgeLoop(customerSupplierEdges(s, dir), Some("src")) { g =>
+      frontierLoop(g.edges, sources, maxHops)
         .groupBy("source", "dist")
         .agg(count(lit(1)).as("n_nodes"))
     }
-  }
 
   /** Harmonic centrality (sampled): per source, Σ 1/d(s, v) over the
     * vertices reached within `maxHops` — the centrality that stays
@@ -1520,22 +1510,11 @@ object Graph {
     * integers at any scale.
     */
   def shortestPathCounts(s: SparkSession, dir: String, source: Long = 1L,
-                         maxHops: Int = 4): DataFrame = {
-    val e = customerSupplierEdges(s, dir)
-      .select(col("src"), col("dst")).persist()
-    graft.CacheScope.register(e) // eager: every hop joins it
-    val p = loopParallelism(s, e.count())
-    withLoopConf(s, p) {
-      // pin the loop's edge cache onto hash(src, p) once (r12, guide
-      // §2.4 — see katzCentrality): the scan-partitioned cache
-      // re-exchanged the full edge table every hop (StageProbe)
-      val ed = graft.CacheScope.register(
-        e.repartition(p, col("src")).persist())
-      e.unpersist()
-      frontierLoop(ed, Seq(source), maxHops)
+                         maxHops: Int = 4): DataFrame =
+    edgeLoop(customerSupplierEdges(s, dir), Some("src")) { g =>
+      frontierLoop(g.edges, Seq(source), maxHops)
         .select("id", "dist", "n_paths")
     }
-  }
 
   /** Local clustering coefficient 2·T(v)/(d(v)·(d(v)−1)) over the
     * thresholded supplier co-purchase graph (the same graph
@@ -1616,18 +1595,9 @@ object Graph {
     */
   def betweennessSample(s: SparkSession, dir: String,
                         sources: Seq[Long] = Seq(1L, 2L, 3L),
-                        maxHops: Int = 4, k: Int = 30): DataFrame = {
-    val e = customerSupplierEdges(s, dir)
-      .select(col("src"), col("dst")).persist()
-    graft.CacheScope.register(e) // eager: forward + every backward level
-    val p = loopParallelism(s, e.count())
-    withLoopConf(s, p) {
-      // pin the loop's edge cache onto hash(src, p) once (r12, guide
-      // §2.4 — see katzCentrality): the scan-partitioned cache
-      // re-exchanged the full edge table every hop (StageProbe)
-      val ed = graft.CacheScope.register(
-        e.repartition(p, col("src")).persist())
-      e.unpersist()
+                        maxHops: Int = 4, k: Int = 30): DataFrame =
+    edgeLoop(customerSupplierEdges(s, dir), Some("src")) { g =>
+      val ed = g.edges
       // per-level rings straight from the kernel: each is already its
       // own localCheckpoint'ed frame, so the backward pass touches
       // exactly ring(lvl) and ring(lvl+1) per level instead of
@@ -1673,7 +1643,6 @@ object Graph {
         .orderBy(col("betweenness").desc, col("id"))
         .limit(k)
     }
-  }
 
   /** Per-edge triangle SUPPORT against a pre-oriented edge list
     * `or0(u, v, s, t, dt)` restricted to the surviving set
@@ -2064,11 +2033,11 @@ object Graph {
     val o = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
     val cnt = li.join(o, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_custkey").as("c"),
-        (col("l_suppkey") + lit(1000000L)).as("sup"))
+        (col("l_suppkey") + SupplierOffset).as("sup"))
       .agg(count(lit(1)).as("cnt"))
     val mx = cnt.agg(max(col("cnt")).as("mc"))
     // read every relaxation round; pinned onto hash(src) partitions
-    // (r12, guide §2.4 — see katzCentrality) so the per-round frontier
+    // (r12, guide §2.4 — see edgeLoop) so the per-round frontier
     // join reads it shuffle-free: the scan-partitioned cache
     // re-exchanged the full edge table every round (StageProbe: 6 ×
     // 1.17M-row exchanges per query at sf0.1). Row movement only.
@@ -2135,22 +2104,8 @@ object Graph {
   def katzCentrality(s: SparkSession, dir: String, rounds: Int = 6,
                      alpha: Double = 0.05, k: Int = 20): DataFrame = {
     require(rounds >= 1 && rounds <= 12, "walk-count truncation depth")
-    val e0 = CacheScope.track(customerSupplierEdges(s, dir)
-      .select(col("src"), col("dst")).persist())
-    val p = loopParallelism(s, e0.count())
-    withLoopConf(s, p) {
-      // OPTIMIZATION r12 (guide §2.4): pin the edge cache onto
-      // hash(src, p) partitions ONCE — the pagerank family gets this
-      // for free (struct0 is built by an in-scope join), but here the
-      // raw scan-partitioned cache made EVERY round's scatter join
-      // re-exchange the full edge table (StageProbe: 6 × 1.17M-row /
-      // 10.7 MB exchanges per query at sf0.1); now only the per-round
-      // message aggregation shuffles. Row movement only — no value
-      // changes anywhere.
-      val e = CacheScope.register(e0.repartition(p, col("src")).persist())
-      e0.unpersist() // the pinned copy is the only reader from here on
-      val nodes = CacheScope.register( // eager (r11): round 1 reads it
-        e.select(col("src").as("id")).distinct().persist()) // from 2 subtrees
+    edgeLoop(customerSupplierEdges(s, dir), Some("src")) { g =>
+      val (e, nodes) = (g.edges, g.vertices)
       // OPTIMIZATION r11: accumulate Σ α^t·w_t incrementally instead of
       // accreting one w_t column per round — the per-round checkpoint
       // carries (id, w, acc) at CONSTANT width rather than t DECIMAL(38)
@@ -2322,7 +2277,7 @@ object Graph {
   def salsaScores(s: SparkSession, dir: String, rounds: Int = 3,
                   k: Int = 10): DataFrame = {
     val pairs = customerSupplierEdges(s, dir)
-      .filter(col("src") < lit(1000000L))
+      .filter(col("src") < SupplierOffset)
       .select(col("src").as("c"), col("dst").as("sup")).persist()
     graft.CacheScope.register(pairs) // eager: degrees + each round
     val p = loopParallelism(s, pairs.count())
@@ -2378,13 +2333,10 @@ object Graph {
     * at loop parallelism.
     */
   def voteRank(s: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    val e = customerSupplierEdges(s, dir)
-      .select(col("src"), col("dst")).persist()
-    graft.CacheScope.register(e) // eager: every round reads it
-    val nEdges = e.count() / 2
-    val nodes = e.select(col("src").as("id")).distinct()
-      .persist()
-    graft.CacheScope.register(nodes)
+    val e = CacheScope.track(customerSupplierEdges(s, dir).persist())
+    val nEdges = checkedCount(e) / 2 // eager: every round reads it
+    val nodes = CacheScope.track(
+      e.select(col("src").as("id")).distinct().persist())
     val nNodes = nodes.count()
     val delta = 1000000L * nNodes / (2 * nEdges)
     val p = loopParallelism(s, nEdges)
@@ -2594,17 +2546,8 @@ object Graph {
   def eigenvectorCentrality(s: SparkSession, dir: String,
                             rounds: Int = 6, k: Int = 20): DataFrame = {
     require(rounds >= 1 && rounds <= 12, "walk-count truncation depth")
-    val e0 = CacheScope.track(customerSupplierEdges(s, dir)
-      .select(col("src"), col("dst")).persist())
-    val p = loopParallelism(s, e0.count())
-    withLoopConf(s, p) {
-      // pin the edge cache onto hash(src, p) once (r12, guide §2.4) —
-      // see katzCentrality: the scan-partitioned cache re-exchanged
-      // the full edge table every round; row movement only
-      val e = CacheScope.register(e0.repartition(p, col("src")).persist())
-      e0.unpersist() // the pinned copy is the only reader from here on
-      val nodes = CacheScope.register( // eager (r11): round 1 reads it
-        e.select(col("src").as("id")).distinct().persist()) // from 2 subtrees
+    edgeLoop(customerSupplierEdges(s, dir), Some("src")) { g =>
+      val (e, nodes) = (g.edges, g.vertices)
       var w = nodes.select(col("id"),
         lit(1).cast("decimal(38,0)").as("w"))
       // checkpoint EVERY round (r12 revert of the r11 every-2nd-round
@@ -2711,7 +2654,7 @@ object Graph {
   def resourceAllocation(s: SparkSession, dir: String, k: Int = 50,
                          degCap: Int = 64): DataFrame = {
     val adj = customerSupplierEdges(s, dir)
-      .filter(col("src") < lit(1000000L))
+      .filter(col("src") < SupplierOffset)
       .select(col("src").as("c"), col("dst").as("sup"))
     val deg = adj.groupBy("c").agg(count(lit(1)).as("deg"))
       .filter(col("deg").between(2, degCap))
@@ -3015,7 +2958,7 @@ object Graph {
   def jaccardLinkPred(s: SparkSession, dir: String, k: Int = 50,
                       degCap: Int = 64): DataFrame = {
     val adj = customerSupplierEdges(s, dir)
-      .filter(col("src") < lit(1000000L))
+      .filter(col("src") < SupplierOffset)
       .select(col("src").as("c"), col("dst").as("sup"))
     val degC = adj.groupBy("c").agg(count(lit(1)).as("deg"))
       .filter(col("deg").between(2, degCap))
@@ -3051,7 +2994,7 @@ object Graph {
   def preferentialAttachment(s: SparkSession, dir: String, k: Int = 50,
                              degCap: Int = 64): DataFrame = {
     val adj = customerSupplierEdges(s, dir)
-      .filter(col("src") < lit(1000000L))
+      .filter(col("src") < SupplierOffset)
       .select(col("src").as("c"), col("dst").as("sup"))
     val degC = adj.groupBy("c").agg(count(lit(1)).as("deg"))
       .filter(col("deg").between(2, degCap))

@@ -9,10 +9,13 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec,
+  FilterExec, InputAdapter, ProjectExec, QueryExecution, SparkPlan,
+  WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper,
+  QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
@@ -94,6 +97,40 @@ object PlanShape extends AdaptiveSparkPlanHelper {
   def broadcastsOfCached(plan: SparkPlan): Int =
     collectWithSubqueries(plan) { case b: BroadcastExchangeLike => b }
       .count(b => collect(b) { case i: InMemoryTableScanExec => i }.nonEmpty)
+
+  /** The plans that built the caches `plan` reads, directly or through
+    * other caches. One object per cache, shared by every plan reading it. */
+  def caches(plan: SparkPlan): Seq[SparkPlan] = {
+    val direct = collectWithSubqueries(plan) {
+      case i: InMemoryTableScanExec => i.relation.cacheBuilder.cachedPlan }
+    direct ++ direct.flatMap(caches)
+  }
+
+  /** The exchanges in `plan` alone, not in the caches it reads. */
+  def ownExchanges(plan: SparkPlan): Seq[Exchange] =
+    collectWithSubqueries(plan) { case x: Exchange => x }
+
+  /** Every exchange `plan` runs, including those that built its caches. */
+  def exchanges(plan: SparkPlan): Seq[Exchange] =
+    (plan +: caches(plan)).flatMap(ownExchanges)
+
+  /** The cache (its building plan) `plan` reads through projections and
+    * filters only. */
+  @scala.annotation.tailrec
+  def cacheRead(plan: SparkPlan): Option[SparkPlan] = plan match {
+    case i: InMemoryTableScanExec => Some(i.relation.cacheBuilder.cachedPlan)
+    case q: QueryStageExec => cacheRead(q.plan)
+    case _: ProjectExec | _: FilterExec | _: WholeStageCodegenExec |
+         _: InputAdapter | _: ColumnarToRowExec => cacheRead(plan.children.head)
+    case _ => None
+  }
+
+  def readsFiles(cache: SparkPlan): Boolean =
+    collect(cache) { case f: FileSourceScanExec => f }.nonEmpty
+
+  /** `xs` without repeats of the same object. */
+  def distinctRefs[A <: AnyRef](xs: Seq[A]): Seq[A] =
+    xs.foldLeft(Vector.empty[A])((acc, x) => if (acc.exists(_ eq x)) acc else acc :+ x)
 }
 
 class GraphSpec extends SparkSpec {
@@ -335,7 +372,64 @@ class GraphSpec extends SparkSpec {
     writeFixture(dir, Seq((1L, 1L, 10L), (2L, 2L, 2000000L)))
     val e1 = intercept[IllegalArgumentException](Graph.csGraph(spark, dir))
     assert(e1.getMessage.contains("supplierOffset"))
-    intercept[IllegalArgumentException](Graph.twoHopReach(spark, dir))
+    Seq[(String, () => Any)](
+      "two_hop_reach" -> (() => Graph.twoHopReach(spark, dir)),
+      "bfs_distances" -> (() => Graph.bfsDistances(spark, dir, 1L)),
+      "eccentricity_sample" -> (() => Graph.eccentricitySample(spark, dir)),
+      "harmonic_centrality" -> (() => Graph.harmonicCentrality(spark, dir)),
+      "shortest_path_counts" -> (() => Graph.shortestPathCounts(spark, dir)),
+      "betweenness_sample" -> (() => Graph.betweennessSample(spark, dir)),
+      "katz_centrality" -> (() => Graph.katzCentrality(spark, dir)),
+      "eigenvector_centrality" -> (() => Graph.eigenvectorCentrality(spark, dir)),
+      "k_core" -> (() => Graph.kCore(spark, dir)),
+      "label_prop" -> (() => Graph.labelPropagation(spark, dir)),
+      "modularity" -> (() => Graph.modularity(spark, dir)),
+      "vote_rank" -> (() => Graph.voteRank(spark, dir)),
+      "weighted_ppr" -> (() => Graph.weightedPpr(spark, dir))).foreach {
+      case (name, q) =>
+        val e = intercept[IllegalArgumentException](q())
+        assert(e.getMessage.contains("supplierOffset"), name)
+    }
+    CacheScope.release(spark, blocking = true)
+  }
+
+  test("pinned loops exchange their raw edges once and never re-shuffle the pinned copy") {
+    // 150k distinct customer-supplier pairs: 300k edges, enough for two
+    // loop partitions. Broadcast joins are off so every join shuffles
+    // the way it does once the edges outgrow a broadcast (sf0.1).
+    val dir = tempDir()
+    writeFixture(dir, (0L until 150000L).map(i => (i, i % 997, i % 20000)))
+    val loops = Seq[(String, () => Any)](
+      "bfs_distances" -> (() => Graph.bfsDistances(spark, dir, 1L).collect()),
+      "eccentricity_sample" -> (() => Graph.eccentricitySample(spark, dir).collect()),
+      "shortest_path_counts" -> (() => Graph.shortestPathCounts(spark, dir).collect()),
+      "betweenness_sample" -> (() => Graph.betweennessSample(spark, dir).collect()),
+      "katz_centrality" -> (() => Graph.katzCentrality(spark, dir).collect()),
+      "eigenvector_centrality" -> (() => Graph.eigenvectorCentrality(spark, dir).collect()),
+      "label_prop" -> (() => Graph.labelPropagation(spark, dir).collect()),
+      "modularity" -> (() => Graph.modularity(spark, dir).collect()))
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(threshold)
+    spark.conf.set(threshold, "-1")
+    try loops.foreach { case (name, q) =>
+      val plans = new JobProbe().run(spark)(q()).plans.asScala.toSeq
+      CacheScope.release(spark, blocking = true)
+      val caches = PlanShape.distinctRefs(plans.flatMap(PlanShape.caches))
+      val xs = PlanShape.distinctRefs(plans.flatMap(PlanShape.exchanges))
+      def readers(of: Seq[SparkPlan]): Seq[Exchange] = xs.filter(x =>
+        PlanShape.cacheRead(x.child).exists(c => of.exists(_ eq c)))
+      val pins = readers(caches.filter(PlanShape.readsFiles))
+      assert(pins.size == 1, s"$name: ${pins.size} exchanges of the raw edges")
+      assert(pins.head.outputPartitioning.numPartitions == 2, name)
+      val pinned = caches.filter(c =>
+        PlanShape.ownExchanges(c).exists(_ eq pins.head))
+      assert(pinned.size == 1, s"$name: no cache holds the pinned copy")
+      // modularity's two closing joins re-key the edges on src whenever
+      // the label table does not broadcast (the raw cache before edgeLoop)
+      val again = if (name == "modularity") Nil else readers(pinned)
+      assert(again.isEmpty, s"$name re-shuffles the pinned edges: " +
+        again.map(_.simpleString(3)).mkString("; "))
+    } finally spark.conf.set(threshold, prev)
   }
 
   test("components loop over the pinned edges matches union-find") {
