@@ -25,7 +25,13 @@ import graft.{CacheScope, Tables}
   * the iteration's single action as scalars (the reference's side-file
   * exchange, SURVEY S9).
   *
-  * For the customer⇄supplier graph "once" means once per SESSION: the
+  * Every view of the customer⇄supplier graph derives from one relation,
+  * [[orderLines]] (`(c, sup)`, one row per order line): it is the one
+  * place the supplier-id offset is applied and checked, and the views
+  * over it are the one place orientation (symmetric or one-way) and
+  * multiplicity (distinct or weighted) are decided.
+  *
+  * For this graph "once" means once per SESSION: the
   * ppr_top10, pagerank_global, hits_scores and graph_components loops
   * read one pinned [[CsGraph]] that survives `CacheScope.release`
   * ([[csGraph]] says what invalidates it). Per-round joins hint the
@@ -33,11 +39,10 @@ import graft.{CacheScope, Tables}
   * broadcast, is never re-shipped by a broadcast job each round. The
   * other loops over this graph build their own edge copies, and
   * [[edgeLoop]] is the one place their policy lives: cache and count
-  * the raw edges once (checking the supplier offset in the same job),
-  * size the partitions from that count, pin the loop's conf, and hand
-  * the rounds one copy hash-partitioned on their join key. salsa (two
-  * pinned copies of the one-way half) and vote_rank (sized from half
-  * its edges) still decide on their own.
+  * the raw edges once, size the partitions from that count, pin the
+  * loop's conf, and hand the rounds one copy hash-partitioned on their
+  * join key. salsa (two pinned copies of the one-way pairs) and
+  * vote_rank (sized from half its edges) still decide on their own.
   *
   * The two loops sit at different layers, each chosen by measurement:
   *  - PPR iterates DataFrames — its per-vertex state is a wide row of
@@ -134,8 +139,7 @@ object Graph {
 
   def personalizedPageRank(edges: DataFrame, sources: Seq[Long],
                            iterations: Int, alpha: Double = 0.15,
-                           danglingFree: Boolean = false,
-                           checkpointEvery: Int = 1): DataFrame = {
+                           danglingFree: Boolean = false): DataFrame = {
     // cache the raw edge list first: vertices, out-degrees and the
     // structure table all derive from it, and the caller's edge
     // expression may be an arbitrarily expensive join
@@ -159,7 +163,7 @@ object Graph {
     // stay cached until then; it is dropped after the loop.
     val struct = CacheScope.track(withOutdeg(e).persist())
     val ranks = pprLoop(struct, vertices, sources, iterations, alpha,
-      danglingFree, checkpointEvery)
+      danglingFree)
     e.unpersist(blocking = false)
     ranks
     }
@@ -179,8 +183,7 @@ object Graph {
     * beats an RDD cogroup loop ~2x per iteration here (measured). */
   private def pprLoop(struct: DataFrame, vertices: DataFrame,
                       sources: Seq[Long], iterations: Int, alpha: Double,
-                      danglingFree: Boolean,
-                      checkpointEvery: Int): DataFrame = {
+                      danglingFree: Boolean): DataFrame = {
     val n = sources.size
     require(n > 0, "at least one source required")
     import struct.sparkSession.implicits._
@@ -189,7 +192,7 @@ object Graph {
         when(col("id") === src, 1.0).otherwise(0.0).as(rankCol(i))
       }: _*)
 
-    for (it <- 1 to iterations) {
+    for (_ <- 1 to iterations) {
       val contribs = struct
         .join(ranks.withColumnRenamed("id", "src").hint("shuffle_hash"), "src")
         .select(
@@ -200,18 +203,14 @@ object Graph {
         // vertices (e.g. the symmetrized customer⇄supplier graph —
         // every vertex has out-edges by construction): missing mass is
         // structurally zero, so the per-iteration Observation feedback
-        // and its driver round-trip disappear entirely, and iterations
-        // chain LAZILY — each ranks plan is referenced exactly once by
-        // the next, so `checkpointEvery` iterations fuse into one job
-        // with no intermediate materialization. (GraphSpec proves this
-        // path ≡ the generic path on the fixture graph; the oracle
-        // drops its miss term in lockstep, see pprOracleSql.)
-        val gathered0 = contribs.groupBy("id")
+        // and its driver round-trip disappear entirely: each round is
+        // one checkpointed gather. (GraphSpec proves this path ≡ the
+        // generic path on the fixture graph; the oracle drops its miss
+        // term in lockstep, see pprOracleSql.)
+        val gathered = contribs.groupBy("id")
           .agg(sum(rankCol(0)).as(rankCol(0)),
             (1 until n).map(i => sum(rankCol(i)).as(rankCol(i))): _*)
-        val gathered =
-          if (it % checkpointEvery == 0) gathered0.localCheckpoint()
-          else gathered0
+          .localCheckpoint()
         ranks = vertices.join(gathered.hint("shuffle_hash"), Seq("id"), "left")
           .select(
             col("id") +: (0 until n).map { i =>
@@ -476,31 +475,59 @@ object Graph {
       .limit(k)
   }
 
-  /** A deterministic bipartite-ish graph from the fixture tables for the
-    * queries surface: customer ⇄ supplier whenever a lineitem links them
-    * through an order. Supplier ids are offset to avoid key collision.
-    */
-  def customerSupplierEdges(s: SparkSession, dir: String,
-                            distinctPairs: Boolean = true): DataFrame = {
-    val li = Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey")
-    val o = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
-    val pairs0 = li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("c"),
-        (col("l_suppkey") + SupplierOffset).as("sup"))
-    // PPR needs exact edge multiplicity (duplicates skew out-degrees),
-    // but the components loop dedupes in-partition anyway — skipping
-    // the distinct there removes a full shuffle of the edge table
-    val pairs = if (distinctPairs) pairs0.distinct() else pairs0
-    // both directions in one pass — a self-union would run the
-    // lineitem⋈orders build twice
-    pairs.select(explode(array(
-        struct(col("c").as("src"), col("sup").as("dst")),
-        struct(col("sup").as("src"), col("c").as("dst")))).as("e"))
-      .select(col("e.src"), col("e.dst"))
-  }
-
   /** Where supplier ids start in the customer⇄supplier graph. */
   private val SupplierOffset = 1000000L
+
+  /** `(c, sup)`, one row per order line: the customer and the supplier
+    * an order line links, supplier ids shifted by [[SupplierOffset]]
+    * so the two id spaces stay disjoint. Every customer⇄supplier view
+    * derives from this relation, and it checks the offset inline: a
+    * custkey >= the offset fails the first job that reads it (a
+    * `raise_error`, no extra job) instead of colliding silently. */
+  private def orderLines(s: SparkSession, dir: String): DataFrame = {
+    val li = Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey")
+    val o = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
+    val c = col("o_custkey")
+    li.join(o, col("l_orderkey") === col("o_orderkey"))
+      .select(
+        when(c >= SupplierOffset, raise_error(concat(lit("custkey "),
+          c.cast("string"), lit(s" >= supplierOffset $SupplierOffset: " +
+            "customer and supplier ids collide in the customer⇄supplier " +
+            "graph")))).otherwise(c).as("c"),
+        (col("l_suppkey") + SupplierOffset).as("sup"))
+  }
+
+  /** `(src, dst, carry…)`: both directions of every `(c, sup, carry…)`
+    * row in one pass (a self-union would run the lineitem⋈orders build
+    * twice). */
+  private def symmetric(pairs: DataFrame, carry: String*): DataFrame = {
+    def half(src: String, dst: String) =
+      struct(col(src).as("src") +: col(dst).as("dst") +: carry.map(col): _*)
+    pairs.select(explode(array(half("c", "sup"), half("sup", "c"))).as("e"))
+      .select(col("e.*"))
+  }
+
+  /** The customer⇄supplier graph: distinct symmetric `(src, dst)`
+    * edges, customer ⇄ supplier whenever an order line links them. */
+  def customerSupplierEdges(s: SparkSession, dir: String): DataFrame =
+    symmetric(orderLines(s, dir).distinct())
+
+  /** `(c, sup, w)`: the distinct pairs weighted by link multiplicity,
+    * the number of order lines linking them. */
+  private def weightedPairs(s: SparkSession, dir: String): DataFrame =
+    orderLines(s, dir).groupBy("c", "sup").agg(count(lit(1)).as("w"))
+
+  /** `(c, sup, deg)`: the distinct customer → supplier pairs of the
+    * customers whose degree is in `[2, degCap]`, the candidate side of
+    * the supplier link predictors. The cap bounds the wedge self-join:
+    * Σ deg² ≤ cap·|E|, and a hub customer linked to every supplier
+    * says nothing about supplier affinity anyway. */
+  private def cappedCustomers(s: SparkSession, dir: String,
+                              degCap: Int): DataFrame = {
+    val adj = orderLines(s, dir).distinct()
+    adj.join(adj.groupBy("c").agg(count(lit(1)).as("deg"))
+      .filter(col("deg").between(2, degCap)), "c")
+  }
 
   /** `body` over the session's [[csGraph]], inside its [[withLoopConf]].
     * Runtime bloom filters are off: a checkpointed vector has no size
@@ -510,20 +537,6 @@ object Graph {
     val g = csGraph(s, dir)
     withLoopConf(s, g.p,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false")(body(g))
-  }
-
-  /** Counts the symmetric [[customerSupplierEdges]] (materializing them
-    * if persisted) and, in the same job, requires custkey <
-    * [[SupplierOffset]]. Every supplier id is >= the offset, so the
-    * largest `least(src, dst)` is the largest custkey while the id
-    * spaces are disjoint, and >= the offset once a custkey collides. */
-  private def checkedCount(edges: DataFrame): Long = {
-    val Row(n: Long, maxC) = edges
-      .agg(count(lit(1)), max(least(col("src"), col("dst"))).cast("long")).head()
-    require(maxC == null || maxC.asInstanceOf[Long] < SupplierOffset,
-      s"custkey $maxC >= supplierOffset $SupplierOffset: customer and " +
-        "supplier ids collide in the customer⇄supplier graph")
-    n
   }
 
   /** What [[edgeLoop]] hands its body: the loop's edges and their
@@ -538,9 +551,8 @@ object Graph {
 
   /** The one place the customer⇄supplier loops that build their own
     * edges pin, size and configure themselves. `raw` (symmetric `src,
-    * dst` edges) is cached and counted in one job that also checks the
-    * supplier offset ([[checkedCount]]); the loop's partition count is
-    * [[loopParallelism]] of that count and `body` runs inside
+    * dst` edges) is cached and counted in one job; the loop's partition
+    * count is [[loopParallelism]] of that count and `body` runs inside
     * [[withLoopConf]]. With a `key`, the body reads one copy
     * hash-partitioned on it, registered with [[CacheScope]], and the raw
     * cache is dropped: a scan-partitioned cache made every round's join
@@ -551,7 +563,7 @@ object Graph {
       body: LoopEdges => A): A = {
     val s = raw.sparkSession
     val e = CacheScope.track(raw.persist())
-    val n = checkedCount(e)
+    val n = e.count()
     val p = loopParallelism(s, n)
     withLoopConf(s, p) {
       val edges = key.fold(e) { k =>
@@ -590,8 +602,9 @@ object Graph {
     * (`catalog.clearCache()`, a Dataset unpersist) or its cached RDD
     * unpersisted directly. Blocks lost after loading are not detected
     * here; Spark recomputes and re-caches them from lineage on the next
-    * read. Requires custkey < [[SupplierOffset]]: the queries over it
-    * rely on the two id spaces being disjoint.
+    * read. Its build fails when a custkey reaches [[SupplierOffset]]
+    * ([[orderLines]]): the queries over it rely on the two id spaces
+    * being disjoint.
     */
   def csGraph(s: SparkSession, dir: String): CsGraph = pinned.synchronized {
     pinned.filterInPlace((ss, _) => !ss.sparkContext.isStopped)
@@ -629,7 +642,7 @@ object Graph {
     // one scan of lineitem⋈orders: the raw edges are cached for the
     // counting job and dropped once the pinned copies are loaded
     val e = customerSupplierEdges(s, dir).persist()
-    val nEdges = checkedCount(e)
+    val nEdges = e.count()
     val p = loopParallelism(s, nEdges)
     withLoopConf(s, p) {
       val edges = withOutdeg(e).persist()
@@ -645,16 +658,11 @@ object Graph {
   /** queries-surface entry: PPR over the customer⇄supplier graph. */
   def pprTopK(s: SparkSession, dir: String, sources: Seq[Long],
               iterations: Int, k: Int): DataFrame = {
-    // the symmetrized graph has no dangling vertices, so the fast
-    // lazy-chained path applies. checkpointEvery stays 1: the r11 A/B
-    // of 2 (two scatter/gather rounds fused per job) measured 4.1 →
-    // 6.7 s warm at sf0.1 — the multi-rank-column rows make the fused
-    // double-join job slower than two materialized single-round jobs,
-    // the opposite of the single-rank loops (textrank/pagerank), where
-    // fusion won. localCheckpoint placement is semantics-neutral
-    // either way.
+    // the symmetrized graph has no dangling vertices, so the fast path
+    // applies (fusing two rounds per job measured 4.1 → 6.7 s warm at
+    // sf0.1, so every round is its own checkpointed job)
     val ranks = csLoop(s, dir)(g => pprLoop(g.edges, g.vertices, sources,
-      iterations, alpha = 0.15, danglingFree = true, checkpointEvery = 1))
+      iterations, alpha = 0.15, danglingFree = true))
     // round BEFORE the top-k cut: mathematically tied ranks can differ
     // in the last ulps between engines (different add order); ranking
     // on the shared 9-dp rounding + id tiebreak keeps the selected SET
@@ -837,12 +845,9 @@ object Graph {
     * customers: for every supplier pair with a common customer,
     * score = Σ 1/ln(deg(customer)) over the common customers, top-k
     * pairs. The wedge join fans out quadratically in customer degree,
-    * so customers are DEGREE-CAPPED before the join (deg ∈ [2, cap]):
-    * Σ deg² ≤ cap·|E| bounds wedge volume linearly in the edge count —
-    * the orientation-free analogue of the triangle census's
-    * degree-orient fix; a hub customer linked to every supplier says
-    * nothing about supplier affinity anyway (the usual IDF-style
-    * justification). Cut decisions (top-k) happen on the 6-dp ROUNDED
+    * so customers are DEGREE-CAPPED before the join ([[cappedCustomers]])
+    * — the orientation-free analogue of the triangle census's
+    * degree-orient fix. Cut decisions (top-k) happen on the 6-dp ROUNDED
     * score with pair tiebreak, so both engines rank identically.
     * Measured (VERDICT r5 #5 re-check): 5.84 s standalone at sf0.1 /
     * local[32] on the unchanged plan — the r5 in-sequence 13.09 s
@@ -851,12 +856,7 @@ object Graph {
     */
   def adamicAdar(s: SparkSession, dir: String, k: Int = 50,
                  degCap: Int = 64): DataFrame = {
-    val adj = customerSupplierEdges(s, dir)
-      .filter(col("src") < SupplierOffset)
-      .select(col("src").as("c"), col("dst").as("sup"))
-    val deg = adj.groupBy("c").agg(count(lit(1)).as("deg"))
-      .filter(col("deg").between(2, degCap))
-    val wb = adj.join(deg, "c")
+    val wb = cappedCustomers(s, dir, degCap)
       .select(col("c"), col("sup"), (lit(1.0) / log(col("deg"))).as("w"))
       .persist()
     graft.CacheScope.register(wb) // eager: both wedge sides read it
@@ -928,21 +928,24 @@ object Graph {
     * so every sufficient statistic is an exact integer count; each
     * community's term floor-quantizes to a 1e-12 LONG before the
     * order-free sum. Two keyed joins of the edge list against the
-    * (id → label) table; nothing quadratic.
+    * (id → label) table; nothing quadratic. Both start from one join
+    * of the dst-pinned edges with the labels on dst, so the edges never
+    * re-key: the edges are symmetric, so counting them by their dst's
+    * label gives d_c, and only the label-tagged intra rows re-key on
+    * src.
     */
   def modularity(s: SparkSession, dir: String, rounds: Int = 3): DataFrame =
     edgeLoop(customerSupplierEdges(s, dir), Some("dst")) { g =>
       val e = g.edges
       val lab = CacheScope.register(labelPropAssign(e, rounds).persist())
       val de = g.nEdges
-      val intra = e
-        .join(lab.select(col("id").as("src"), col("lbl").as("ls")), "src")
+      val byDst = e
         .join(lab.select(col("id").as("dst"), col("lbl").as("ld")), "dst")
+      val intra = byDst
+        .join(lab.select(col("id").as("src"), col("lbl").as("ls")), "src")
         .filter(col("ls") === col("ld"))
         .groupBy(col("ls").as("lbl")).agg(count(lit(1)).as("inc"))
-      val degC = e
-        .join(lab.select(col("id").as("src"), col("lbl")), "src")
-        .groupBy("lbl").agg(count(lit(1)).as("dc"))
+      val degC = byDst.groupBy(col("ld").as("lbl")).agg(count(lit(1)).as("dc"))
       degC.join(intra, Seq("lbl"), "left")
         .select(
           floor((coalesce(col("inc"), lit(0L)).cast("double") / de -
@@ -968,9 +971,8 @@ object Graph {
     */
   def twoHopReach(s: SparkSession, dir: String, k: Int = 50,
                   degCap: Int = 64): DataFrame = {
-    val e = CacheScope.track(customerSupplierEdges(s, dir)
-      .select(col("src"), col("dst")).persist())
-    checkedCount(e) // eager: degree filter + both hop joins read it
+    val e = CacheScope.track(customerSupplierEdges(s, dir).persist())
+    e.count() // eager: degree filter + both hop joins read it
     // the degree table is |V| rows — broadcast it so the cap filter
     // never shuffles the edge list; the wedge join proper hashes on
     // the (vertex) mid key with the edge list as build side
@@ -1034,8 +1036,7 @@ object Graph {
     * degree agg + one edge join; nothing quadratic anywhere.
     */
   def assortativity(s: SparkSession, dir: String): DataFrame = {
-    val e = customerSupplierEdges(s, dir)
-      .select(col("src"), col("dst")).persist()
+    val e = customerSupplierEdges(s, dir).persist()
     graft.CacheScope.register(e) // eager: degrees + the edge join read it
     val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
     val ends = e
@@ -1068,8 +1069,8 @@ object Graph {
     * guard rather than a division blow-up.
     */
   def hillTailIndex(s: SparkSession, dir: String, m: Int = 50): DataFrame = {
-    val e = customerSupplierEdges(s, dir).select(col("src"), col("dst"))
-    val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
+    val deg = customerSupplierEdges(s, dir)
+      .groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
     val top = deg.orderBy(col("deg").desc, col("id")).limit(m)
     val dm = top.agg(min(col("deg")).as("dmin"))
     top.crossJoin(broadcast(dm))
@@ -1195,7 +1196,7 @@ object Graph {
     // full edge table every round (StageProbe: 4 × 1.17M-row
     // exchanges per query). Row movement only.
     val e = CacheScope.register(customerSupplierEdges(s, dir)
-      .select(col("src"), col("dst")).repartition(col("dst")).persist())
+      .repartition(col("dst")).persist())
     val nodes = e.select(col("src").as("id")).distinct()
     val h0 = element_at(polyHashArray(array(col("id").cast("string"))), 1)
     val h = (1 to 4).foldLeft(h0) { (acc, _) =>
@@ -1316,9 +1317,7 @@ object Graph {
     // argmin over a multiset equals argmin over its set, so edge
     // MULTIPLICITY cannot change a walk — skip the distinct()'s full
     // edge shuffle (the components loop makes the same cut)
-    val e = CacheScope.track(
-      customerSupplierEdges(s, dir, distinctPairs = false)
-        .select(col("src"), col("dst")).persist())
+    val e = CacheScope.track(symmetric(orderLines(s, dir)).persist())
     val seeds = Tables.customer(s, dir)
       .select(col("c_custkey").cast("long").as("seed"))
       .filter(pmod(col("seed"), lit(100L)) === lit(1L))
@@ -1402,8 +1401,7 @@ object Graph {
   def weightedPpr(s: SparkSession, dir: String, source: Long = 1L,
                   rounds: Int = 6, alpha: Double = 0.15,
                   k: Int = 20): DataFrame =
-    edgeLoop(customerSupplierEdges(s, dir, distinctPairs = false)
-        .groupBy("src", "dst").agg(count(lit(1)).as("w"))) { g =>
+    edgeLoop(symmetric(weightedPairs(s, dir), "w")) { g =>
       val e = g.edges
       val outw = e.groupBy("src").agg(sum("w").as("wout"))
       val struct0 = CacheScope.track(
@@ -1482,8 +1480,7 @@ object Graph {
     * two quantized ratios.
     */
   def graphSummary(s: SparkSession, dir: String): DataFrame = {
-    val e = customerSupplierEdges(s, dir)
-      .select(col("src"), col("dst")).persist()
+    val e = customerSupplierEdges(s, dir).persist()
     graft.CacheScope.register(e) // eager: degree agg + edge count
     val deg = e.groupBy("src").agg(count(lit(1)).as("d"))
     deg.agg(count(lit(1)).as("n_vertices"),
@@ -1880,13 +1877,8 @@ object Graph {
     */
   def butterflyCount(s: SparkSession, dir: String,
                      maxDeg: Long = 64L): DataFrame = {
-    val e = CacheScope.track(
-      Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey")
-        .join(Tables.orders(s, dir).select("o_orderkey", "o_custkey"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("c"), col("l_suppkey").as("sup"))
-        .distinct()
-        .persist()) // degree filter + both wedge sides read it
+    val e = CacheScope.track(orderLines(s, dir).distinct()
+      .persist()) // degree filter + both wedge sides read it
     val deg = e.groupBy("sup").agg(count(lit(1)).as("d"))
       .filter(col("d") >= 2 && col("d") <= maxDeg)
     val ee = e.join(deg, "sup") // only wedge-capable suppliers
@@ -1918,9 +1910,8 @@ object Graph {
     * nothing quadratic.
     */
   def degreeAnonymity(s: SparkSession, dir: String): DataFrame = {
-    val e = CacheScope.track(
-      customerSupplierEdges(s, dir, distinctPairs = true)
-        .persist()) // degree agg + the signature join read it
+    val e = CacheScope.track(customerSupplierEdges(s, dir)
+      .persist()) // degree agg + the signature join read it
     val deg = e.groupBy("src").agg(count(lit(1)).as("d"))
     val sig = e
       .join(deg.select(col("src").as("dst"), col("d").as("dd")), "dst")
@@ -2029,27 +2020,17 @@ object Graph {
     */
   def weightedSssp(s: SparkSession, dir: String, source: Long = 1L,
                    rounds: Int = 6, k: Int = 50): DataFrame = {
-    val li = Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey")
-    val o = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
-    val cnt = li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_custkey").as("c"),
-        (col("l_suppkey") + SupplierOffset).as("sup"))
-      .agg(count(lit(1)).as("cnt"))
-    val mx = cnt.agg(max(col("cnt")).as("mc"))
+    val wp = weightedPairs(s, dir)
+    val mx = wp.agg(max(col("w")).as("mc"))
     // read every relaxation round; pinned onto hash(src) partitions
     // (r12, guide §2.4 — see edgeLoop) so the per-round frontier
     // join reads it shuffle-free: the scan-partitioned cache
     // re-exchanged the full edge table every round (StageProbe: 6 ×
     // 1.17M-row exchanges per query at sf0.1). Row movement only.
-    val edges = CacheScope.register(cnt.crossJoin(broadcast(mx))
+    val edges = CacheScope.register(symmetric(wp.crossJoin(broadcast(mx))
       .select(col("c"), col("sup"),
-        floor(log(col("mc").cast("double") / col("cnt")) * lit(1e9)
-          + lit(0.5)).cast("long").as("w"))
-      .select(explode(array(
-        struct(col("c").as("src"), col("sup").as("dst"), col("w")),
-        struct(col("sup").as("src"), col("c").as("dst"), col("w"))))
-        .as("e"))
-      .select(col("e.src"), col("e.dst"), col("e.w"))
+        floor(log(col("mc").cast("double") / col("w")) * lit(1e9)
+          + lit(0.5)).cast("long").as("w")), "w")
       .repartition(col("src"))
       .persist())
     var dist = edges.sparkSession.range(1).toDF("x")
@@ -2164,10 +2145,7 @@ object Graph {
     // (strengths + the p-value join's probe side); a lazy persist let
     // both stages race and compute the 1.17M-row weighted-edge build
     // independently (StageProbe: 3 identical build stages per run)
-    val e = CacheScope.register(
-      customerSupplierEdges(s, dir, distinctPairs = false)
-        .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-        .persist())
+    val e = CacheScope.register(symmetric(weightedPairs(s, dir), "w").persist())
     val st = e.groupBy("src")
       .agg(sum(col("w")).as("st"), count(lit(1)).as("deg"))
     val withP = e
@@ -2276,9 +2254,7 @@ object Graph {
     */
   def salsaScores(s: SparkSession, dir: String, rounds: Int = 3,
                   k: Int = 10): DataFrame = {
-    val pairs = customerSupplierEdges(s, dir)
-      .filter(col("src") < SupplierOffset)
-      .select(col("src").as("c"), col("dst").as("sup")).persist()
+    val pairs = orderLines(s, dir).distinct().persist()
     graft.CacheScope.register(pairs) // eager: degrees + each round
     val p = loopParallelism(s, pairs.count())
     val (auth, hub) = withLoopConf(s, p) {
@@ -2334,7 +2310,7 @@ object Graph {
     */
   def voteRank(s: SparkSession, dir: String, k: Int = 3): DataFrame = {
     val e = CacheScope.track(customerSupplierEdges(s, dir).persist())
-    val nEdges = checkedCount(e) / 2 // eager: every round reads it
+    val nEdges = e.count() / 2 // eager: every round reads it
     val nodes = CacheScope.track(
       e.select(col("src").as("id")).distinct().persist())
     val nNodes = nodes.count()
@@ -2599,10 +2575,8 @@ object Graph {
     // + cache-encode round measured slightly WORSE query CPU here —
     // unlike graph_backbone, where the same table feeds three branches
     // and eager registration removed two full rebuilds
-    val ew = CacheScope.track(
-      customerSupplierEdges(s, dir, distinctPairs = false)
-        .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-        .persist()) // degrees + totals + the gain join read it
+    val ew = CacheScope.track(symmetric(weightedPairs(s, dir), "w")
+      .persist()) // degrees + totals + the gain join read it
     val deg = ew.groupBy("src").agg(sum(col("w")).as("kk"))
     val tot = ew.agg(sum(col("w")).as("m2")) // = 2m
     val gains = ew
@@ -2653,12 +2627,7 @@ object Graph {
     */
   def resourceAllocation(s: SparkSession, dir: String, k: Int = 50,
                          degCap: Int = 64): DataFrame = {
-    val adj = customerSupplierEdges(s, dir)
-      .filter(col("src") < SupplierOffset)
-      .select(col("src").as("c"), col("dst").as("sup"))
-    val deg = adj.groupBy("c").agg(count(lit(1)).as("deg"))
-      .filter(col("deg").between(2, degCap))
-    val wb = adj.join(deg, "c")
+    val wb = cappedCustomers(s, dir, degCap)
       .select(col("c"), col("sup"),
         expr("CAST(1000000000 DIV deg AS BIGINT)").as("w9"))
       .persist()
@@ -2957,13 +2926,8 @@ object Graph {
     */
   def jaccardLinkPred(s: SparkSession, dir: String, k: Int = 50,
                       degCap: Int = 64): DataFrame = {
-    val adj = customerSupplierEdges(s, dir)
-      .filter(col("src") < SupplierOffset)
-      .select(col("src").as("c"), col("dst").as("sup"))
-    val degC = adj.groupBy("c").agg(count(lit(1)).as("deg"))
-      .filter(col("deg").between(2, degCap))
     val capped = CacheScope.track(
-      adj.join(degC.select("c"), "c").persist())
+      cappedCustomers(s, dir, degCap).select("c", "sup").persist())
     val degS = capped.groupBy("sup").agg(count(lit(1)).as("d"))
     val common = capped
       .join(capped.select(col("c"), col("sup").as("s2")), "c")
@@ -2993,13 +2957,8 @@ object Graph {
     */
   def preferentialAttachment(s: SparkSession, dir: String, k: Int = 50,
                              degCap: Int = 64): DataFrame = {
-    val adj = customerSupplierEdges(s, dir)
-      .filter(col("src") < SupplierOffset)
-      .select(col("src").as("c"), col("dst").as("sup"))
-    val degC = adj.groupBy("c").agg(count(lit(1)).as("deg"))
-      .filter(col("deg").between(2, degCap))
     val capped = CacheScope.track(
-      adj.join(degC.select("c"), "c").persist())
+      cappedCustomers(s, dir, degCap).select("c", "sup").persist())
     val degS = capped.groupBy("sup").agg(count(lit(1)).as("d"))
     val cand = capped
       .join(capped.select(col("c"), col("sup").as("s2")), "c")
