@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{CacheScope, Tables}
@@ -623,6 +623,22 @@ object Events {
       .orderBy("depth")
   }
 
+  /** First-order transition counts of every user's timeline: `(cur,
+    * nxt, c)`, where c counts the times event type `nxt` directly
+    * follows `cur` in one user's (ts, event_id) order. One windowed
+    * `lead` over events partitioned by user, then one keyed count; the
+    * result is at most |types|² rows, whatever the corpus size.
+    */
+  private def transitions(s: SparkSession, dir: String): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+    Tables.events(s, dir)
+      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+      .withColumn("nxt", lead(col("event_type"), 1).over(w))
+      .filter(col("nxt").isNotNull)
+      .groupBy(col("event_type").as("cur"), col("nxt"))
+      .agg(count(lit(1)).as("c"))
+  }
+
   /** Event-transition matrix: P(next event type | current type) per
     * user timeline — `lead` over each user's (ts, event_id) order, pair
     * counts, then a per-source window total for the probability. Two
@@ -630,13 +646,8 @@ object Events {
     * the output is |types|² rows.
     */
   def eventTransitions(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val pairs = Tables.events(s, dir)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("next_type", lead(col("event_type"), 1).over(w))
-      .filter(col("next_type").isNotNull)
-      .groupBy(col("event_type"), col("next_type"))
-      .agg(count(lit(1)).as("cnt"))
+    val pairs = transitions(s, dir).select(col("cur").as("event_type"),
+      col("nxt").as("next_type"), col("c").as("cnt"))
     val wSrc = Window.partitionBy("event_type")
     pairs.select(col("event_type"), col("next_type"), col("cnt"),
       round(col("cnt") / sum(col("cnt")).over(wSrc), 6).as("prob"))
@@ -1012,7 +1023,7 @@ object Events {
   def olsTrend(s: SparkSession, dir: String): DataFrame = {
     val daily = Tables.events(s, dir)
       .select(col("event_type"),
-        floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
+        epochDay.as("day"))
       .groupBy("event_type", "day").agg(count(lit(1)).as("y"))
     daily.groupBy("event_type").agg(
         count(lit(1)).as("n_days"),
@@ -1046,13 +1057,7 @@ object Events {
     */
   def markovStationary(s: SparkSession, dir: String,
                        rounds: Int = 3): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val trans = Tables.events(s, dir)
-      .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-      .withColumn("nxt", lead(col("event_type"), 1).over(w))
-      .filter(col("nxt").isNotNull)
-      .groupBy(col("event_type").as("cur"), col("nxt"))
-      .agg(count(lit(1)).as("c"))
+    val trans = transitions(s, dir)
     val tot = trans.groupBy("cur").agg(sum(col("c")).as("tc"))
     val p = trans.join(tot, "cur")
       .select(col("cur"), col("nxt"), round(col("c") / col("tc"), 9).as("p"))
@@ -1090,14 +1095,7 @@ object Events {
   def hittingTime(s: SparkSession, dir: String,
                   target: String = "purchase",
                   rounds: Int = 12): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val trans = CacheScope.track(Tables.events(s, dir)
-      .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-      .withColumn("nxt", lead(col("event_type"), 1).over(w))
-      .filter(col("nxt").isNotNull)
-      .groupBy(col("event_type").as("cur"), col("nxt"))
-      .agg(count(lit(1)).as("c"))
-      .persist())
+    val trans = CacheScope.track(transitions(s, dir).persist())
     val tc = trans.groupBy("cur").agg(sum(col("c")).as("tc"))
     var h = trans.select(col("cur").as("state")).distinct()
       .select(col("state"), lit(0L).as("h6"))
@@ -1144,13 +1142,7 @@ object Events {
     */
   def markovClasses(s: SparkSession, dir: String,
                     maxDoublings: Int = 12): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val trans = Tables.events(s, dir)
-      .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-      .withColumn("nxt", lead(col("event_type"), 1).over(w))
-      .filter(col("nxt").isNotNull)
-      .groupBy(col("event_type").as("cur"), col("nxt"))
-      .agg(count(lit(1)).as("c"))
+    val trans = transitions(s, dir)
     val wSrc = Window.partitionBy("cur")
       .orderBy(col("c").desc, col("nxt"))
     val edges = CacheScope.track(trans
@@ -1255,6 +1247,37 @@ object Events {
     floor(c * lit(p) + lit(0.5)) / lit(p)
   }
 
+  /** Day bucket of an event's `ts`: whole UTC days since the epoch. */
+  private def epochDay = floor(unix_timestamp(col("ts")) / lit(86400L))
+
+  /** Dense daily series of `ev`: `measures` aggregated per [[epochDay]]
+    * and left-joined onto a spine of every calendar day from the first
+    * to the last event day, so a day without events reads 0 in every
+    * measure. Columns: `day`, `t` (day − first day) and the measures
+    * under their aliases, each `coalesce`d to 0L.
+    *
+    * Bound: one row per calendar day between the first and last event
+    * — the time span of `ev`, never its volume. That is why a global
+    * `Window.orderBy("day")` over the series stays small at any scale.
+    *
+    * Not cached: within one action every reader of the series reuses
+    * the one exchange of the `ev` aggregate, and the spine join above
+    * it is one row per day. Persisting and materializing the series
+    * here measured slower at sf0.1 (an extra count job per query). A
+    * caller that reads the series in several actions (a `register`ed
+    * intermediate, an iteration's `localCheckpoint`s) aggregates `ev`
+    * once per action.
+    */
+  private def dailySeries(ev: DataFrame)(measures: Column*): DataFrame = {
+    val agg = ev.groupBy(epochDay.as("day"))
+      .agg(measures.head, measures.tail: _*)
+    agg.agg(min("day").as("d0"), max("day").as("d1"))
+      .select(col("d0"), explode(sequence(col("d0"), col("d1"))).as("day"))
+      .join(agg, Seq("day"), "left")
+      .select(col("day") +: (col("day") - col("d0")).as("t") +:
+        agg.columns.tail.map(m => coalesce(col(m), lit(0L)).as(m)): _*)
+  }
+
   /** Autocorrelation of the daily total-event-count series at lags
     * 1..`maxLag` — the seasonality probe run before fitting any
     * forecast. The day spine is densified (missing days count 0) so
@@ -1268,16 +1291,7 @@ object Events {
     * never grows past days×maxLag rows.
     */
   def acfDaily(s: SparkSession, dir: String, maxLag: Int = 7): DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
-      .groupBy("day").agg(count(lit(1)).as("y"))
-      .persist()
-    CacheScope.register(daily0) // eager: spine bounds + both join sides
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val daily = bounds
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select(col("day"), coalesce(col("y"), lit(0L)).as("y"))
+    val daily = dailySeries(Tables.events(s, dir))(count(lit(1)).as("y"))
     val lags = s.range(1, maxLag + 1).select(col("id").cast("int").as("lag"))
     val pairs = daily.crossJoin(broadcast(lags))
       .select(col("lag"), (col("day") + col("lag")).as("day"),
@@ -1364,7 +1378,7 @@ object Events {
   def schemaDrift(s: SparkSession, dir: String): DataFrame = {
     val ev0 = Tables.events(s, dir)
       .select(col("event_type"),
-        floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"),
+        epochDay.as("day"),
         col("value"))
       .persist()
     CacheScope.register(ev0) // eager: median probe + the agg read it
@@ -1413,16 +1427,7 @@ object Events {
     */
   def rollingMedianDaily(s: SparkSession, dir: String,
                          window: Int = 7): DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
-      .groupBy("day").agg(count(lit(1)).as("y"))
-      .persist()
-    CacheScope.register(daily0) // eager: bounds + spine join read it
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val daily = bounds
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select(col("day"), coalesce(col("y"), lit(0L)).as("y"))
+    val daily = dailySeries(Tables.events(s, dir))(count(lit(1)).as("y"))
     val w = Window.orderBy("day").rowsBetween(-(window - 1), 0)
     daily
       .withColumn("fr", array_sort(collect_list(col("y")).over(w)))
@@ -1496,7 +1501,7 @@ object Events {
                    cut: Double = 3.0): DataFrame = {
     val daily = Tables.events(s, dir)
       .select(col("event_type"),
-        floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
+        epochDay.as("day"))
       .groupBy("event_type", "day").agg(count(lit(1)).as("y"))
       .persist()
     CacheScope.register(daily) // eager: median, MAD and the flag scan
@@ -1528,7 +1533,7 @@ object Events {
   def psiDrift(s: SparkSession, dir: String): DataFrame = {
     val ev0 = Tables.events(s, dir)
       .select(col("event_type"),
-        floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"),
+        epochDay.as("day"),
         col("value"))
       .filter(col("value").isNotNull)
       .persist()
@@ -1965,16 +1970,7 @@ object Events {
     * series here; a per-series partition key at scale).
     */
   def stlDecompose(s: SparkSession, dir: String): DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
-      .groupBy("day").agg(count(lit(1)).as("y"))
-      .persist()
-    CacheScope.register(daily0) // eager: spine bounds + the left join
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val daily = bounds
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select(col("day"), coalesce(col("y"), lit(0L)).as("y"))
+    val daily = dailySeries(Tables.events(s, dir))(count(lit(1)).as("y"))
     val wT = Window.orderBy("day").rowsBetween(-3, 3)
     val det = daily
       .select(col("day"), col("y"),
@@ -2604,16 +2600,7 @@ object Events {
     */
   def seasonalityStrength(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val daily0 = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
-      .groupBy("day").agg(count(lit(1)).as("y"))
-      .persist()
-    CacheScope.register(daily0) // spine bounds + the left join
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val daily = bounds
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select(col("day"), coalesce(col("y"), lit(0L)).as("y"))
+    val daily = dailySeries(Tables.events(s, dir))(count(lit(1)).as("y"))
     val wT = Window.orderBy("day").rowsBetween(-3, 3)
     val det = daily
       .select(col("day"), col("y"),
@@ -2687,15 +2674,9 @@ object Events {
     * over the calendar-bounded spine, integer argmax.
     */
   def maxDrawdown(s: SparkSession, dir: String): DataFrame = {
-    val daily0 = Tables.events(s, dir).filter(col("value").isNotNull)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"),
-        floor(col("value") * lit(1e6) + lit(0.5)).cast("long").as("v6"))
-      .groupBy("day").agg(sum("v6").as("x6"))
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val daily = bounds
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select(col("day"), coalesce(col("x6"), lit(0L)).as("x6"))
+    val v6 = floor(col("value") * lit(1e6) + lit(0.5)).cast("long")
+    val daily = dailySeries(Tables.events(s, dir)
+      .filter(col("value").isNotNull))(sum(v6).as("x6"))
     val wc = Window.orderBy("day")
       .rowsBetween(Window.unboundedPreceding, 0)
     val dd = daily
@@ -2769,13 +2750,8 @@ object Events {
     * rows after — corpus-free arithmetic from there.
     */
   def entropyRate(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val trans = Tables.events(s, dir)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("nxt", lead(col("event_type"), 1).over(w))
-      .filter(col("nxt").isNotNull)
-      .groupBy(col("event_type"), col("nxt"))
-      .agg(count(lit(1)).as("c_st"))
+    val trans = transitions(s, dir).select(col("cur").as("event_type"),
+      col("nxt"), col("c").as("c_st"))
     val bySrc = trans.groupBy("event_type").agg(sum("c_st").as("c_s"))
     val l9 = floor(log(col("c_st").cast("double") / col("c_s")) *
       lit(1e9) + lit(0.5)).cast("long")
@@ -3670,7 +3646,7 @@ object Events {
     */
   def mannKendall(s: SparkSession, dir: String): DataFrame = {
     val daily = CacheScope.track(Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
+      .select(epochDay.as("day"))
       .groupBy("day").agg(count(lit(1)).as("y"))
       .persist()) // pair join (both sides) + ties + n read it
     val sPairs = daily.select(col("day").as("d1"), col("y").as("y1"))
@@ -3713,14 +3689,7 @@ object Events {
     */
   def tsMotif(s: SparkSession, dir: String, w: Int = 7,
               excl: Int = 4): DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
-      .groupBy("day").agg(count(lit(1)).as("y"))
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val daily = bounds
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select(col("day"), coalesce(col("y"), lit(0L)).as("y"))
+    val daily = dailySeries(Tables.events(s, dir))(count(lit(1)).as("y"))
     // windows: start s, exact integer values in offset order
     val win = daily
       .select(explode(sequence(lit(0), lit(w - 1))).as("o"), col("day"),
@@ -3842,7 +3811,7 @@ object Events {
                  typeB: String = "purchase"): DataFrame = {
     val ev = Tables.events(s, dir)
       .select(col("event_type"),
-        floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
+        epochDay.as("day"))
     def daily(t: String, out: String) =
       ev.filter(col("event_type") === t)
         .groupBy("day").agg(count(lit(1)).as(out))
@@ -3950,16 +3919,7 @@ object Events {
     * one day-keyed count, the lag join is spine-sized.
     */
   def pacfDaily(s: SparkSession, dir: String): DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
-      .groupBy("day").agg(count(lit(1)).as("y"))
-      .persist()
-    CacheScope.register(daily0) // eager: spine bounds + both join sides
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val daily = bounds
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select(col("day"), coalesce(col("y"), lit(0L)).as("y"))
+    val daily = dailySeries(Tables.events(s, dir))(count(lit(1)).as("y"))
     val lags = s.range(1, 4).select(col("id").cast("int").as("lag"))
     val st = daily.crossJoin(broadcast(lags))
       .select(col("lag"), (col("day") + col("lag")).as("day"),
@@ -4118,7 +4078,7 @@ object Events {
     */
   def runsTest(s: SparkSession, dir: String): DataFrame = {
     val daily = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
+      .select(epochDay.as("day"))
       .groupBy("day").agg(count(lit(1)).as("c"))
     val wd = Window.orderBy("day")
     val sg = daily
@@ -4159,7 +4119,7 @@ object Events {
   def pageHinkley(s: SparkSession, dir: String,
                   delta: Double = 2.0, lambda: Double = 40.0): DataFrame = {
     val daily = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
+      .select(epochDay.as("day"))
       .groupBy("day").agg(count(lit(1)).as("c"))
     val wd = Window.orderBy("day")
     val cum = daily
@@ -4292,16 +4252,7 @@ object Events {
     * day-keyed count; the lag fan-out is a broadcast of h rows.
     */
   def ljungBox(s: SparkSession, dir: String, maxLag: Int = 7): DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
-      .groupBy("day").agg(count(lit(1)).as("y"))
-      .persist()
-    CacheScope.register(daily0) // eager: bounds + spine + totals read it
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val dense = bounds
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select(col("day"), coalesce(col("y"), lit(0L)).as("y"))
+    val dense = dailySeries(Tables.events(s, dir))(count(lit(1)).as("y"))
     val tot = dense.agg(count(lit(1)).as("n"), sum(col("y")).as("sy"))
     val z = dense.crossJoin(broadcast(tot))
       .select(col("day"), col("n"),
@@ -4345,17 +4296,7 @@ object Events {
     */
   def periodogramTopk(s: SparkSession, dir: String, maxP: Int = 14,
                       k: Int = 3): DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
-      .groupBy("day").agg(count(lit(1)).as("y"))
-      .persist()
-    CacheScope.register(daily0)
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val dense = bounds
-      .select(col("d0"), explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select((col("day") - col("d0")).as("t"),
-        coalesce(col("y"), lit(0L)).as("y"))
+    val dense = dailySeries(Tables.events(s, dir))(count(lit(1)).as("y"))
     val tot = dense.agg(count(lit(1)).as("n"), sum(col("y")).as("sy"))
     val z = dense.crossJoin(broadcast(tot))
       .select(col("t"), col("n"),
@@ -4395,17 +4336,7 @@ object Events {
     */
   def hurstRs(s: SparkSession, dir: String,
               ms: Seq[Int] = Seq(5, 10, 15)): DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
-      .groupBy("day").agg(count(lit(1)).as("y"))
-      .persist()
-    CacheScope.register(daily0)
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val dense = bounds
-      .select(col("d0"), explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select((col("day") - col("d0")).as("t"),
-        coalesce(col("y"), lit(0L)).as("y"))
+    val dense = dailySeries(Tables.events(s, dir))(count(lit(1)).as("y"))
     val msDf = s.range(1)
       .select(explode(array(ms.map(m => lit(m.toLong)): _*)).as("m"))
     val base = dense.crossJoin(broadcast(msDf))
@@ -4467,19 +4398,7 @@ object Events {
     * per-day screen).
     */
   def olsInfluence(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
-      .groupBy("day").agg(count(lit(1)).as("y"))
-      .persist()
-    CacheScope.register(daily0)
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val dense = bounds
-      .select(col("d0"), explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select((col("day") - col("d0")).as("t"),
-        coalesce(col("y"), lit(0L)).as("y"))
-      .persist()
-    CacheScope.register(dense) // eager: fit + residual pass read it
+    val dense = dailySeries(Tables.events(s, dir))(count(lit(1)).as("y"))
     val tot = dense.agg(count(lit(1)).as("n"), sum(col("t")).as("st"),
       sum(col("y")).as("sy"),
       sum(col("t") * col("t")).as("stt"),
@@ -4526,18 +4445,7 @@ object Events {
     * day-cardinality, not row-cardinality.
     */
   def ar2Forecast(s: SparkSession, dir: String): DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
-      .groupBy("day").agg(count(lit(1)).as("y"))
-      .persist()
-    CacheScope.register(daily0) // eager: spine bounds + 3 join sides
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val daily = bounds
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select(col("day"), coalesce(col("y"), lit(0L)).as("y"))
-      .persist()
-    CacheScope.register(daily)
+    val daily = dailySeries(Tables.events(s, dir))(count(lit(1)).as("y"))
     val tot = daily.agg(count(lit(1)).as("n"), sum(col("y")).as("sy"),
       max(col("day")).as("dmax"))
     val z = daily.crossJoin(broadcast(tot))
@@ -4790,23 +4698,12 @@ object Events {
   def crossCorrDaily(s: SparkSession, dir: String,
                      typeA: String = "click", typeB: String = "purchase",
                      maxLag: Int = 3): DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .filter(col("event_type").isin(typeA, typeB))
-      .select(col("event_type"),
-        floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
-      .groupBy("day").agg(
-        sum(when(col("event_type") === typeA, lit(1L)).otherwise(lit(0L)))
-          .as("xa"),
-        sum(when(col("event_type") === typeB, lit(1L)).otherwise(lit(0L)))
-          .as("xb"))
-      .persist()
-    CacheScope.register(daily0) // eager: spine bounds + both join sides
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val daily = bounds
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select(col("day"), coalesce(col("xa"), lit(0L)).as("xa"),
-        coalesce(col("xb"), lit(0L)).as("xb"))
+    val daily = dailySeries(Tables.events(s, dir)
+      .filter(col("event_type").isin(typeA, typeB)))(
+      sum(when(col("event_type") === typeA, lit(1L)).otherwise(lit(0L)))
+        .as("xa"),
+      sum(when(col("event_type") === typeB, lit(1L)).otherwise(lit(0L)))
+        .as("xb"))
     val lags = s.range(-maxLag, maxLag + 1L)
       .select(col("id").cast("int").as("lag"))
     val pairs = daily.select(col("day"), col("xa").as("x"))
@@ -4932,17 +4829,7 @@ object Events {
 
   private def dailyTail(s: SparkSession, dir: String, w: Int)
   : DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
-      .groupBy("day").agg(count(lit(1)).as("y"))
-      .persist()
-    CacheScope.register(daily0) // eager: spine bounds + the join read it
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val dense = bounds
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select(col("day"), coalesce(col("y"), lit(0L)).as("y"))
-    dense
+    dailySeries(Tables.events(s, dir))(count(lit(1)).as("y"))
       .withColumn("rd", row_number().over(Window.orderBy(col("day").desc)))
       .filter(col("rd") <= w)
       .withColumn("t", row_number().over(Window.orderBy(col("day")))
@@ -5014,7 +4901,7 @@ object Events {
   : DataFrame = {
     val daily = Tables.events(s, dir)
       .filter(col("event_type") === eventType)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
+      .select(epochDay.as("day"))
       .groupBy("day").agg(count(lit(1)).as("z"))
       .withColumn("p",
         col("day") - lag(col("day"), 1).over(Window.orderBy("day")))
@@ -5062,17 +4949,7 @@ object Events {
     */
   def spectralEntropy(s: SparkSession, dir: String, maxP: Int = 14)
   : DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
-      .groupBy("day").agg(count(lit(1)).as("y"))
-      .persist()
-    CacheScope.register(daily0)
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val dense = bounds
-      .select(col("d0"), explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select((col("day") - col("d0")).as("t"),
-        coalesce(col("y"), lit(0L)).as("y"))
+    val dense = dailySeries(Tables.events(s, dir))(count(lit(1)).as("y"))
     val tot = dense.agg(count(lit(1)).as("n"), sum(col("y")).as("sy"))
     val z = dense.crossJoin(broadcast(tot))
       .select(col("t"), col("n"),
@@ -5124,16 +5001,7 @@ object Events {
     * A and B are exact counts; −ln(A/B) divides them once.
     */
   def sampleEntropy(s: SparkSession, dir: String): DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
-      .groupBy("day").agg(count(lit(1)).as("y"))
-      .persist()
-    CacheScope.register(daily0)
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val dense = bounds
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select(col("day"), coalesce(col("y"), lit(0L)).as("y"))
+    val dense = dailySeries(Tables.events(s, dir))(count(lit(1)).as("y"))
     val st = dense.agg(count(lit(1)).as("n"), sum(col("y")).as("sy"),
       sum(col("y") * col("y")).as("syy"))
     val rr = st.select(col("n"),
@@ -5181,16 +5049,7 @@ object Events {
     * one day-spine aggregation — no iteration, no matrix solve.
     */
   def adfTest(s: SparkSession, dir: String): DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
-      .groupBy("day").agg(count(lit(1)).as("y"))
-      .persist()
-    CacheScope.register(daily0)
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val dense = bounds
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select(col("day"), coalesce(col("y"), lit(0L)).as("y"))
+    val dense = dailySeries(Tables.events(s, dir))(count(lit(1)).as("y"))
     val w = Window.orderBy("day")
     val reg = dense
       .withColumn("x", lag(col("y"), 1).over(w))
@@ -5236,7 +5095,7 @@ object Events {
     val l0 = math.log((1 - p1) / (1 - p0))
     val up = math.floor(math.log(19.0) * 1e9 + 0.5).toLong
     val daily = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"),
+      .select(epochDay.as("day"),
         (col("event_type") === "purchase").cast("long").as("k"))
       .groupBy("day")
       .agg(count(lit(1)).as("n"), sum(col("k")).as("k"))
@@ -5356,7 +5215,7 @@ object Events {
     def yT(t: Double) = -math.log(-math.log(1 - 1.0 / t))
     val mx = Tables.events(s, dir)
       .filter(col("value").isNotNull)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"),
+      .select(epochDay.as("day"),
         floor(col("value") * lit(1e6) + lit(0.5)).cast("long").as("v6"))
       .groupBy("day").agg(max(col("v6")).as("m6"))
     val g = mx.agg(count(lit(1)).as("n"),
@@ -5486,7 +5345,7 @@ object Events {
     val z95 = 1.6448536269514722 // driver literal in both engines
     val daily = Tables.events(s, dir)
       .select(col("event_type"),
-        floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
+        epochDay.as("day"))
       .groupBy("event_type", "day").agg(count(lit(1)).as("y"))
     val g = daily.groupBy("event_type").agg(count(lit(1)).as("n"),
       sum(col("y")).as("sy"), sum(col("y") * col("y")).as("syy"))
@@ -5591,7 +5450,7 @@ object Events {
   def jackknifeRatio(s: SparkSession, dir: String): DataFrame = {
     val daily = Tables.events(s, dir)
       .filter(col("value").isNotNull)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"),
+      .select(epochDay.as("day"),
         floor(col("value") * lit(1e6) + lit(0.5)).cast("long").as("v6"))
       .groupBy("day").agg(count(lit(1)).as("x"), sum(col("v6")).as("y6"))
       .persist()
@@ -5772,14 +5631,7 @@ object Events {
     * agg + an O(L)-lag window over the day spine — no iteration.
     */
   def kpssTest(s: SparkSession, dir: String, lag: Int = 5): DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
-      .groupBy("day").agg(count(lit(1)).as("y"))
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val dense = bounds
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select(col("day"), coalesce(col("y"), lit(0L)).as("y"))
+    val dense = dailySeries(Tables.events(s, dir))(count(lit(1)).as("y"))
     val st = dense.agg(count(lit(1)).as("n"), sum(col("y")).as("sy"))
     val w = Window.orderBy("day")
     val e = dense.crossJoin(broadcast(st))
@@ -5821,21 +5673,10 @@ object Events {
     * day-keyed agg, one O(1)-lag window, one moment agg.
     */
   def engleGranger(s: SparkSession, dir: String): DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .filter(col("event_type").isin("view", "click"))
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"),
-        (col("event_type") === "view").cast("long").as("isv"))
-      .groupBy("day")
-      .agg(sum(col("isv")).as("x"),
-        sum(lit(1L) - col("isv")).as("y"))
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val dense = bounds
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select(col("day"), coalesce(col("x"), lit(0L)).as("x"),
-        coalesce(col("y"), lit(0L)).as("y"))
-      .persist()
-    CacheScope.register(dense) // eager: the OLS agg + residual pass
+    val dense = dailySeries(Tables.events(s, dir)
+        .filter(col("event_type").isin("view", "click")))(
+      sum((col("event_type") === "view").cast("long")).as("x"),
+      sum((col("event_type") =!= "view").cast("long")).as("y"))
     val g = dense.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
       sum(col("y")).as("sy"),
       sum(col("x") * col("x")).as("sxx"),
@@ -5951,18 +5792,10 @@ object Events {
     * one 9-moment agg — no iteration, no matrix library.
     */
   def grangerCausality(s: SparkSession, dir: String): DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .filter(col("event_type").isin("view", "purchase"))
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"),
-        (col("event_type") === "view").cast("long").as("isv"))
-      .groupBy("day")
-      .agg(sum(col("isv")).as("v"), sum(lit(1L) - col("isv")).as("p"))
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val dense = bounds
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select(col("day"), coalesce(col("v"), lit(0L)).as("v"),
-        coalesce(col("p"), lit(0L)).as("p"))
+    val dense = dailySeries(Tables.events(s, dir)
+        .filter(col("event_type").isin("view", "purchase")))(
+      sum((col("event_type") === "view").cast("long")).as("v"),
+      sum((col("event_type") =!= "view").cast("long")).as("p"))
     val w = Window.orderBy("day")
     val rows = dense
       .withColumn("pl", org.apache.spark.sql.functions.lag(col("p"), 1)
@@ -6047,7 +5880,7 @@ object Events {
     */
   def seasonalMannKendall(s: SparkSession, dir: String): DataFrame = {
     val cell = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"),
+      .select(epochDay.as("day"),
         hour(col("ts")).as("hr"))
       .groupBy("day", "hr").agg(count(lit(1)).as("y"))
     val bounds = cell.agg(min("day").as("d0"), max("day").as("d1"))
@@ -6094,14 +5927,7 @@ object Events {
     * agg + one O(1)-lag window.
     */
   def durbinWatson(s: SparkSession, dir: String): DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
-      .groupBy("day").agg(count(lit(1)).as("y"))
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val dense = bounds
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select(col("day"), coalesce(col("y"), lit(0L)).as("y"))
+    val dense = dailySeries(Tables.events(s, dir))(count(lit(1)).as("y"))
     val w = Window.orderBy("day")
     val withLag = dense
       .withColumn("yl", org.apache.spark.sql.functions.lag(col("y"), 1)
@@ -6131,20 +5957,10 @@ object Events {
     * day-keyed agg + one 2-row combine.
     */
   def chowTest(s: SparkSession, dir: String): DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
-      .groupBy("day").agg(count(lit(1)).as("y"))
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val dense2 = bounds
-      .select(col("d0"), col("d1"),
-        explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select((col("day") - col("d0")).as("t"),
-        coalesce(col("y"), lit(0L)).as("y"),
-        floor((col("d1") - col("d0") + 1) / lit(2.0)).cast("long")
-          .as("m"))
-    val segs = dense2
-      .select(when(col("t") < col("m"), lit(0L)).otherwise(lit(1L))
+    val dense = dailySeries(Tables.events(s, dir))(count(lit(1)).as("y"))
+    val mid = floor(col("nd") / lit(2.0)).cast("long") // ⌊days / 2⌋
+    val segs = dense.crossJoin(broadcast(dense.agg(count(lit(1)).as("nd"))))
+      .select(when(col("t") < mid, lit(0L)).otherwise(lit(1L))
         .as("seg"), col("t"), col("y"))
       .groupBy("seg")
       .agg(count(lit(1)).as("n"), sum(col("t")).as("st"),
@@ -6204,7 +6020,7 @@ object Events {
   def wilcoxonSignedRank(s: SparkSession, dir: String): DataFrame = {
     val daily = Tables.events(s, dir)
       .filter(col("event_type").isin("view", "click"))
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"),
+      .select(epochDay.as("day"),
         (col("event_type") === "view").cast("long").as("isv"))
       .groupBy("day")
       .agg(sum(col("isv")).as("x"), sum(lit(1L) - col("isv")).as("y"))
@@ -6343,18 +6159,7 @@ object Events {
     * count agg.
     */
   def ransacTrend(s: SparkSession, dir: String): DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
-      .groupBy("day").agg(count(lit(1)).as("y"))
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val dense = bounds
-      .select(col("d0"), explode(sequence(col("d0"), col("d1")))
-        .as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select((col("day") - col("d0")).as("t"),
-        coalesce(col("y"), lit(0L)).as("y"))
-      .persist()
-    CacheScope.register(dense) // eager: proposals + the inlier probe
+    val dense = dailySeries(Tables.events(s, dir))(count(lit(1)).as("y"))
     val st = dense.agg(count(lit(1)).as("n"), sum(col("y")).as("sy"))
     val cand = dense.select(col("t").as("ti"), col("y").as("yi"))
       .join(dense.select(col("t").as("tj"), col("y").as("yj")),
@@ -6395,15 +6200,7 @@ object Events {
     */
   def markovAbsorption(s: SparkSession, dir: String, rounds: Int = 6,
                        target: String = "purchase"): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ts"),
-      col("event_id"))
-    val trans = Tables.events(s, dir)
-      .select(col("user_id"), col("event_type"), col("ts"),
-        col("event_id"))
-      .withColumn("nxt", lead(col("event_type"), 1).over(w))
-      .filter(col("nxt").isNotNull)
-      .groupBy(col("event_type").as("cur"), col("nxt"))
-      .agg(count(lit(1)).as("c"))
+    val trans = transitions(s, dir)
     val tot = trans.groupBy("cur").agg(sum(col("c")).as("tc"))
     val p = trans.join(tot, "cur")
       .select(col("cur"), col("nxt"),
@@ -6447,7 +6244,7 @@ object Events {
   def ksTwoSample(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
       .filter(col("value").isNotNull)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"),
+      .select(epochDay.as("day"),
         floor(col("value") * lit(1e6) + lit(0.5)).cast("long").as("v6"))
       .persist()
     CacheScope.register(ev) // eager: the split bound + both halves
@@ -6491,20 +6288,10 @@ object Events {
     * day-keyed agg + an 8-row fold.
     */
   def transferEntropy(s: SparkSession, dir: String): DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .filter(col("event_type").isin("view", "purchase"))
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"),
-        (col("event_type") === "view").cast("long").as("isv"))
-      .groupBy("day")
-      .agg(sum(col("isv")).as("x"), sum(lit(1L) - col("isv")).as("y"))
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val dense = bounds
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select(col("day"), coalesce(col("x"), lit(0L)).as("x"),
-        coalesce(col("y"), lit(0L)).as("y"))
-      .persist()
-    CacheScope.register(dense) // eager: two medians + the triple scan
+    val dense = dailySeries(Tables.events(s, dir)
+        .filter(col("event_type").isin("view", "purchase")))(
+      sum((col("event_type") === "view").cast("long")).as("x"),
+      sum((col("event_type") =!= "view").cast("long")).as("y"))
     def med(c: String) = {
       val byV = dense.groupBy(col(c).as("v")).agg(count(lit(1)).as("k"))
       val n = byV.agg(sum(col("k")).as("n"))
@@ -6567,20 +6354,10 @@ object Events {
     * one day-keyed agg + two tiny threshold windows.
     */
   def tailDependence(s: SparkSession, dir: String): DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .filter(col("event_type").isin("view", "click"))
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"),
-        (col("event_type") === "view").cast("long").as("isv"))
-      .groupBy("day")
-      .agg(sum(col("isv")).as("x"), sum(lit(1L) - col("isv")).as("y"))
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val dense = bounds
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select(coalesce(col("x"), lit(0L)).as("x"),
-        coalesce(col("y"), lit(0L)).as("y"))
-      .persist()
-    CacheScope.register(dense) // eager: two thresholds + the joint scan
+    val dense = dailySeries(Tables.events(s, dir)
+        .filter(col("event_type").isin("view", "click")))(
+      sum((col("event_type") === "view").cast("long")).as("x"),
+      sum((col("event_type") =!= "view").cast("long")).as("y"))
     def q80(c: String) = {
       val byV = dense.groupBy(col(c).as("v")).agg(count(lit(1)).as("k"))
       val n = byV.agg(sum(col("k")).as("n"))
@@ -6654,14 +6431,7 @@ object Events {
     * CI. Scale: one day-keyed agg + an O(L)-lag window.
     */
   def hacMeanCi(s: SparkSession, dir: String, lag: Int = 5): DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
-      .groupBy("day").agg(count(lit(1)).as("y"))
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val dense = bounds
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select(col("day"), coalesce(col("y"), lit(0L)).as("y"))
+    val dense = dailySeries(Tables.events(s, dir))(count(lit(1)).as("y"))
     val st = dense.agg(count(lit(1)).as("n"), sum(col("y")).as("sy"))
     val w = Window.orderBy("day")
     val e = dense.crossJoin(broadcast(st))
@@ -6706,18 +6476,7 @@ object Events {
     */
   def poissonGlmTrend(s: SparkSession, dir: String,
                       rounds: Int = 3): DataFrame = {
-    val daily0 = Tables.events(s, dir)
-      .select(floor(unix_timestamp(col("ts")) / lit(86400L)).as("day"))
-      .groupBy("day").agg(count(lit(1)).as("y"))
-    val bounds = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-    val dense = bounds
-      .select(col("d0"), explode(sequence(col("d0"), col("d1")))
-        .as("day"))
-      .join(daily0, Seq("day"), "left")
-      .select((col("day") - col("d0")).as("t"),
-        coalesce(col("y"), lit(0L)).as("y"))
-      .persist()
-    CacheScope.register(dense) // eager: init + every Newton scan
+    val dense = dailySeries(Tables.events(s, dir))(count(lit(1)).as("y"))
     val q9 = (c: org.apache.spark.sql.Column) =>
       floor(c * lit(1e9) + lit(0.5)) / lit(1e9)
     var state = dense

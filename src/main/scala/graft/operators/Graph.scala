@@ -1053,8 +1053,11 @@ object Graph {
     val mean = col("sx") / m
     val cov = col("sxy") / m - mean * mean
     val va = col("sxx") / m - mean * mean
+    // every edge end of the same degree (e.g. a perfect matching): va
+    // is 0 and the coefficient undefined — NULL, as DuckDB's 0.0 / 0.0
     stats.select(col("m").as("n_edge_ends"),
-      (floor(cov / va * lit(1e6) + lit(0.5)) / lit(1e6)).as("assortativity"))
+      (floor(try_divide(cov, va) * lit(1e6) + lit(0.5)) / lit(1e6))
+        .as("assortativity"))
   }
 
   /** Hill tail-index estimator over the degree distribution: α̂ =

@@ -2,8 +2,10 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.collection.mutable
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted}
+  SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: where a query's time goes (guide §1/§7). Runs each named
@@ -13,16 +15,18 @@ import org.apache.spark.sql.SparkSession
   *    run/CPU/GC/deserialize seconds, shuffle read/write MB, shuffle
   *    records written and the stage name (callsite);
   *  - a `[q]` line per pass with the query's totals: wall seconds,
-  *    jobs, task run/CPU/GC milliseconds, shuffle bytes and records
-  *    written.
+  *    jobs, duplicate stages, task run/CPU/GC milliseconds, shuffle
+  *    bytes and records written. A duplicate stage is submitted while
+  *    another in-flight stage is still building one of its persisted
+  *    RDDs: both compute it (a cache stampede).
   *
   * Usage: `SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=... sbt "runMain
   * graft.tools.StageProbe q1 q2 ..."` (defaults: sf0.1, 32 cores).
   */
 object StageProbe {
   private final class Totals {
-    val jobs, runMs, cpuNs, gcMs, shuffleBytes, shuffleRecords = new AtomicLong
-    def all: Seq[AtomicLong] = Seq(jobs, runMs, cpuNs, gcMs, shuffleBytes, shuffleRecords)
+    val jobs, dups, runMs, cpuNs, gcMs, shuffleBytes, shuffleRecords = new AtomicLong
+    def all: Seq[AtomicLong] = Seq(jobs, dups, runMs, cpuNs, gcMs, shuffleBytes, shuffleRecords)
   }
 
   def main(args: Array[String]): Unit = {
@@ -33,12 +37,26 @@ object StageProbe {
       .config("spark.ui.enabled", "false").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     val t = new Totals
+    // persisted RDD id -> in-flight stages computing it; built RDDs
+    val building = mutable.Map.empty[Int, mutable.Set[Int]]
+    val built = mutable.Set.empty[Int]
     s.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         t.jobs.incrementAndGet(); ()
       }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+        val si = e.stageInfo
+        val persisted = si.rddInfos.filter(_.storageLevel.isValid).map(_.id)
+        if (persisted.exists(r => !built(r) && building.get(r).exists(_.nonEmpty)))
+          t.dups.incrementAndGet()
+        persisted.foreach(r => building.getOrElseUpdate(r, mutable.Set.empty) += si.stageId)
+      }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val si = e.stageInfo
+        si.rddInfos.filter(_.storageLevel.isValid).foreach { r =>
+          building.get(r.id).foreach(_ -= si.stageId)
+          if (si.failureReason.isEmpty) built += r.id
+        }
         val m = si.taskMetrics
         if (m != null) {
           t.runMs.addAndGet(m.executorRunTime)
@@ -72,6 +90,7 @@ object StageProbe {
         .foreach(_.unpersist(blocking = true))
       Thread.sleep(1200) // let the listener bus drain (no public flush)
       println(f"[q] $n%-28s $pass%-4s wall=$wall%7.2f s jobs=${t.jobs.get}%4d " +
+        f"dup=${t.dups.get}%3d " +
         f"run=${t.runMs.get}%8d ms cpu=${t.cpuNs.get / 1000000L}%8d ms " +
         f"gc=${t.gcMs.get}%6d ms shuffleWrite=${t.shuffleBytes.get}%12d B " +
         f"records=${t.shuffleRecords.get}%10d")

@@ -222,4 +222,17 @@ class EventsSpec extends SparkSpec {
     // and no cell can exceed its cohort size
     rows.foreach { case ((w, _), n) => assert(n <= cohorts(w)) }
   }
+
+  test("daily series, day buckets and transition counts are built in one place") {
+    // a hand-built spine would re-decide the day bucket, bounds,
+    // zero-fill and caching on its own; the one site outside
+    // dailySeries is seasonalMannKendall's (day × hour) grid
+    val src = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths
+      .get("src/main/scala/graft/operators/Events.scala")))
+    def uses(code: String) =
+      java.util.regex.Pattern.quote(code).r.findAllMatchIn(src).size
+    assert(uses("explode(sequence(col(\"d0\"), col(\"d1\")))") <= 2)
+    assert(uses("floor(unix_timestamp(col(\"ts\")) / lit(86400L))") == 1)
+    assert(uses("lead(col(\"event_type\"), 1)") == 1)
+  }
 }

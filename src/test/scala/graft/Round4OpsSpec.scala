@@ -9,8 +9,8 @@ import graft.operators.{Dedup, Events, Graph, Ml, Similarity, TextStats}
   */
 class Round4OpsSpec extends SparkSpec {
 
-  private def edges(): Array[(Long, Long)] =
-    Graph.customerSupplierEdges(spark, sf).collect()
+  private def edges(dir: String = sf): Array[(Long, Long)] =
+    Graph.customerSupplierEdges(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
 
   test("bfs_distances: matches driver-side BFS from the same source") {
@@ -44,19 +44,30 @@ class Round4OpsSpec extends SparkSpec {
   }
 
   test("assortativity: matches the direct Pearson formula over edge ends") {
-    val e = edges()
-    val deg = e.groupBy(_._1).map { case (s, xs) => s -> xs.length.toLong }
-    val ends = e.map { case (a, b) => (deg(a), deg(b)) }
-    val m = ends.length.toDouble
-    val sx = ends.map(_._1).sum.toDouble
-    val sxx = ends.map(x => x._1 * x._1).sum.toDouble
-    val sxy = ends.map(x => x._1 * x._2).sum.toDouble
-    val mean = sx / m
-    val want = ((sxy / m - mean * mean) / (sxx / m - mean * mean) * 1e6 + 0.5)
-      .floor / 1e6
-    val row = Graph.assortativity(spark, sf).collect().head
-    assert(row.getLong(0) == ends.length)
-    assert(row.getDouble(1) == want)
+    import spark.implicits._
+    // a perfect matching (customers 10, 20 each linked to one supplier):
+    // every edge end has degree 1, so the degree variance is 0
+    val matching = java.nio.file.Files.createTempDirectory("matching").toString
+    Seq((1L, 1L), (2L, 2L)).toDF("l_orderkey", "l_suppkey")
+      .write.parquet(s"$matching/lineitem.parquet")
+    Seq((1L, 10L), (2L, 20L)).toDF("o_orderkey", "o_custkey")
+      .write.parquet(s"$matching/orders.parquet")
+    for (dir <- Seq(sf, matching)) {
+      val e = edges(dir)
+      val deg = e.groupBy(_._1).map { case (s, xs) => s -> xs.length.toLong }
+      val ends = e.map { case (a, b) => (deg(a), deg(b)) }
+      val m = ends.length.toDouble
+      val sx = ends.map(_._1).sum.toDouble
+      val sxx = ends.map(x => x._1 * x._1).sum.toDouble
+      val sxy = ends.map(x => x._1 * x._2).sum.toDouble
+      val mean = sx / m
+      val va = sxx / m - mean * mean
+      val want = ((sxy / m - mean * mean) / va * 1e6 + 0.5).floor / 1e6
+      val row = Graph.assortativity(spark, dir).collect().head
+      assert(row.getLong(0) == ends.length)
+      // undefined at zero variance: NULL, as the DuckDB oracle returns
+      if (va == 0) assert(row.isNullAt(1), dir) else assert(row.getDouble(1) == want)
+    }
   }
 
   test("decision_stump: best threshold beats every other threshold") {
