@@ -965,12 +965,6 @@ object SparkEntry {
              (acc, c) -> (acc * 31 + c) % 1099511627776) AS hv
          FROM documents)"""
 
-  /** Personalized-PageRank oracle: the 8 scatter/gather+teleport rounds
-    * unrolled as chained CTEs (SQL can't loop, but a FIXED iteration
-    * count is just 2·iters CTE blocks). Same linear-space arithmetic as
-    * `Graph.personalizedPageRank`, so values agree to well below the
-    * 9-dp rounding both sides apply.
-    */
   /** Unrolled k-core peeling (mirrors `Graph.kCore`: same fixed round
     * count, same restrict-then-recount per round). */
   private def kCoreOracleSql(k: Int, rounds: Int): String = {
@@ -1317,6 +1311,12 @@ object SparkEntry {
       s" ORDER BY round(h, 9) DESC, c LIMIT $k)"
   }
 
+  /** Personalized-PageRank oracle: the 8 scatter/gather+teleport rounds
+    * unrolled as chained CTEs (SQL can't loop, but a FIXED iteration
+    * count is just 2·iters CTE blocks). Same linear-space arithmetic as
+    * `Graph.personalizedPageRank`, so values agree to well below the
+    * 9-dp rounding both sides apply.
+    */
   private def pprOracleSql(sources: Seq[Long], iters: Int, k: Int,
                            danglingFree: Boolean = false): String = {
     val n = sources.size
@@ -1585,10 +1585,6 @@ object SparkEntry {
        FROM ($un) ORDER BY n_centroids"""
   }
 
-  /** `pqOracleSql`'s construction per m with m-suffixed CTE names,
-    * ending in per-m TOTALS (mirrors `Similarity.pqMSweep`: exact
-    * LONG d2 sums across all subspaces, one division by the vector
-    * count). */
   /** tail_token_mass oracle generated from the operator's own default
     * head size (ADVICE r7: hardcoded sweep literals drift silently when
     * the op is invoked with non-default parameters). */
@@ -1667,6 +1663,10 @@ object SparkEntry {
          ORDER BY k"""
   }
 
+  /** `pqOracleSql`'s construction per m with m-suffixed CTE names,
+    * ending in per-m TOTALS (mirrors `Similarity.pqMSweep`: exact
+    * LONG d2 sums across all subspaces, one division by the vector
+    * count). */
   private def pqSweepOracleSql(ms: Seq[Int] = Seq(2, 4),
                                k: Int = 4): String = {
     val dim = 64
@@ -15030,11 +15030,6 @@ object SparkEntry {
        ORDER BY stage"""
   }
 
-  /** MinHash estimator-error audit (W228): the same affine family over
-    * the 40-bit poly hash as `Dedup.minhashEstError` (constants shared
-    * via `Dedup.MhA`/`MhB`/`MhP`), agreement counted over the signature,
-    * exact Jaccard from the shingle sets.
-    */
   /** Shared front half of the MinHash estimator oracles: the affine
     * signature family + the exact-Jaccard candidate pairs at the 0.05
     * audit floor. Consumed by `minhash_est_error` (W228, fixed k) and
@@ -15079,6 +15074,11 @@ object SparkEntry {
          WHERE inter::DOUBLE / (sa.n + sb.n - inter) >= 0.05)"""
   }
 
+  /** MinHash estimator-error audit (W228): the same affine family over
+    * the 40-bit poly hash as `Dedup.minhashEstError` (constants shared
+    * via `Dedup.MhA`/`MhB`/`MhP`), agreement counted over the signature,
+    * exact Jaccard from the shingle sets.
+    */
   private lazy val MinhashEstErrorSql: String = {
     val k = graft.operators.Dedup.MhA.length
     s"""$MinhashPrSigCtes,
@@ -15252,12 +15252,6 @@ object SparkEntry {
            ELSE 0.0 END AS lift
        FROM g CROSS JOIN tot ORDER BY band"""
 
-  /** Ranker rank-agreement audit (W235): BM25 vs tf-idf top-10 per
-    * term — set overlap and normalized Spearman footrule over the
-    * common documents; both rankings re-derived from the surfaced
-    * quantized scores with doc_id tiebreaks, exactly as
-    * `Index.rankAgreement` does.
-    */
   /** Shared BM25 + tf-idf ranked-list CTEs (`sa`/`sb`): the prefix for
     * both `rank_agreement` and `rrf_fusion`.
     */
@@ -15285,6 +15279,12 @@ object SparkEntry {
                   ORDER BY tfidf DESC, doc_id) AS rnk FROM sct)
               WHERE rnk <= 10)"""
 
+  /** Ranker rank-agreement audit (W235): BM25 vs tf-idf top-10 per
+    * term — set overlap and normalized Spearman footrule over the
+    * common documents; both rankings re-derived from the surfaced
+    * quantized scores with doc_id tiebreaks, exactly as
+    * `Index.rankAgreement` does.
+    */
   private lazy val RankAgreementSql: String = s"""$RankersCte,
        j AS (SELECT sa.term, sa.ra, sb.rb
              FROM sa JOIN sb USING (term, doc_id)),

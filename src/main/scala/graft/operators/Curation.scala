@@ -209,13 +209,6 @@ object Curation {
       .select("source", "doc_id")
   }
 
-  /** Token-budget mixing: admit documents per source in deterministic
-    * hash order until the source's cumulative token count reaches
-    * `budget` (the doc that crosses the line is the last one in). This
-    * is the budgeted variant of `sourceQuota` — mixture weights in
-    * tokens, the unit training runs actually meter. One shuffle on
-    * source; the running sum is a single window pass.
-    */
   /** Context-window chunk plan (W223): the overlapping-window layout a
     * pretraining (or RAG-indexing) pipeline cuts each document into —
     * windows of `maxTokens` advancing by `maxTokens - overlap`, last
@@ -249,6 +242,13 @@ object Curation {
           .as("chunk_tokens"))
   }
 
+  /** Token-budget mixing: admit documents per source in deterministic
+    * hash order until the source's cumulative token count reaches
+    * `budget` (the doc that crosses the line is the last one in). This
+    * is the budgeted variant of `sourceQuota` — mixture weights in
+    * tokens, the unit training runs actually meter. One shuffle on
+    * source; the running sum is a single window pass.
+    */
   def tokenBudget(s: SparkSession, dir: String,
                   budget: Long = 600): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -389,13 +389,6 @@ object Curation {
         sum(col("n_tokens")).as("n_tokens"))
   }
 
-  /** Per-source rank normalization of a quality signal: each
-    * document's score becomes its percent-rank WITHIN its source —
-    * the calibration step before mixing sources whose raw quality
-    * scales differ (one crawler's 0.8 is another's 0.3; ranks
-    * compare). One shuffle on source; character count stands in for
-    * the quality score so the operator is self-contained.
-    */
   /** Robust per-dimension scaling of the embedding matrix:
     * z = (x − median) / MAD — the outlier-insensitive sibling of
     * [[standardize]] (a single corrupted vector shifts a mean/stddev fit
@@ -426,6 +419,13 @@ object Curation {
           round((col("x") - col("med")) / col("mad"), 4)).as("z"))
   }
 
+  /** Per-source rank normalization of a quality signal: each
+    * document's score becomes its percent-rank WITHIN its source —
+    * the calibration step before mixing sources whose raw quality
+    * scales differ (one crawler's 0.8 is another's 0.3; ranks
+    * compare). One shuffle on source; character count stands in for
+    * the quality score so the operator is self-contained.
+    */
   def rankNormalize(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("source").orderBy("n_chars", "doc_id")

@@ -894,15 +894,6 @@ object Events {
         round(sum(col("iend") - col("istart")), 4).as("covered_sec"))
   }
 
-  /** Per-type z-score outliers: events whose value deviates from the
-    * event_type mean by ≥ `cut` population standard deviations. The
-    * per-type moments are one partial-aggregated shuffle over a
-    * handful of groups, then broadcast back onto the scan — the big
-    * side is read once and never shuffled, which is the only shape
-    * that survives a 100 TB events table. Moments are rounded to 6 dp
-    * before the z computation so the flag threshold compares identical
-    * doubles on both engines (raw stddev merge order differs).
-    */
   /** Nearest-in-time event join: for each purchase, the click of the
     * same user with the smallest |Δt| within a ±1 h band — the
     * attribution shape where "closest touchpoint" beats "last
@@ -935,6 +926,15 @@ object Events {
       .select(col("p_id"), col("m.c_id").as("c_id"), col("m.d").as("dist_us"))
   }
 
+  /** Per-type z-score outliers: events whose value deviates from the
+    * event_type mean by ≥ `cut` population standard deviations. The
+    * per-type moments are one partial-aggregated shuffle over a
+    * handful of groups, then broadcast back onto the scan — the big
+    * side is read once and never shuffled, which is the only shape
+    * that survives a 100 TB events table. Moments are rounded to 6 dp
+    * before the z computation so the flag threshold compares identical
+    * doubles on both engines (raw stddev merge order differs).
+    */
   def zscoreAnomalies(s: SparkSession, dir: String,
                       cut: Double = 2.5): DataFrame = {
     val ev = Tables.events(s, dir)
@@ -948,16 +948,6 @@ object Events {
       .select("event_id", "event_type", "value", "z")
   }
 
-  /** Top session paths: the `plen`-event-type prefix of every session
-    * (same 30-min-gap sessionization as `sessionize`), joined with `>`
-    * into a path string, counted, top-k paths. The funnel-discovery
-    * complement of `funnelConversion`'s fixed funnel: this one MINES
-    * the common paths. Same single exchange on user_id as sessionize;
-    * the per-session prefix comes from a bounded `slice` of the
-    * sorted event list (struct sort on (ts, event_id) keeps tie order
-    * deterministic), and the path count is a second ≤|paths|-key
-    * shuffle. Top-k cuts on (count, path) — fully deterministic.
-    */
   /** Incremental aggregate maintenance: a standing per-type aggregate
     * (count/sum/min/max) kept current by MERGING a new batch's partial
     * aggregate into the stored state instead of rescanning history —
@@ -987,6 +977,16 @@ object Events {
         min(col("mn")).as("min_value"), max(col("mx")).as("max_value"))
   }
 
+  /** Top session paths: the `plen`-event-type prefix of every session
+    * (same 30-min-gap sessionization as `sessionize`), joined with `>`
+    * into a path string, counted, top-k paths. The funnel-discovery
+    * complement of `funnelConversion`'s fixed funnel: this one MINES
+    * the common paths. Same single exchange on user_id as sessionize;
+    * the per-session prefix comes from a bounded `slice` of the
+    * sorted event list (struct sort on (ts, event_id) keeps tie order
+    * deterministic), and the path count is a second ≤|paths|-key
+    * shuffle. Top-k cuts on (count, path) — fully deterministic.
+    */
   def topPaths(s: SparkSession, dir: String, gapMinutes: Int = 30,
                plen: Int = 3, k: Int = 15): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1145,11 +1145,11 @@ object Events {
     val trans = transitions(s, dir)
     val wSrc = Window.partitionBy("cur")
       .orderBy(col("c").desc, col("nxt"))
-    val edges = CacheScope.track(trans
+    val edges = CacheScope.register(trans
       .withColumn("rn", row_number().over(wSrc))
       .filter(col("rn") <= 2)
       .select(col("cur").as("src"), col("nxt").as("dst"))
-      .persist())
+      .persist()) // eager: the node union's two branches and the seed read it
     val nodes = edges.select(col("src").as("n"))
       .union(edges.select(col("dst").as("n"))).distinct()
     var reach = nodes.select(col("n").as("src"), col("n").as("dst"))
@@ -3706,14 +3706,14 @@ object Events {
     val varw = (col("syy").cast("double") -
       col("sy").cast("double") * col("sy").cast("double") /
         lit(w.toDouble)) / lit(w.toDouble)
-    val zq = CacheScope.track(win
+    val zq = CacheScope.register(win
       .select(col("st"),
         when(col("syy") * lit(w.toLong) === col("sy") * col("sy"),
           transform(col("vs"), _ => lit(0L)))
           .otherwise(transform(col("vs"), v =>
             floor((v("y") - mean) / sqrt(varw) * lit(1e6) + lit(0.5))
               .cast("long"))).as("z"))
-      .persist()) // both sides of the all-pairs join
+      .persist()) // eager: both sides of the all-pairs join read it
     val dist = aggregate(
       zip_with(col("za"), col("zb"), (a, b) => (a - b) * (a - b)),
       lit(0L), _ + _)
@@ -4811,6 +4811,13 @@ object Events {
       q(gap / sqrt(va("b")), 6).as("glass_delta"))
   }
 
+  /** 2^e as an exact LONG via a bit shift (e ≤ 62) — the dyadic-
+    * weight primitive: ratios of these are exactly-representable
+    * powers of two in both engines, with no libm pow anywhere.
+    */
+  private def pow2(e: org.apache.spark.sql.Column) =
+    call_function("shiftleft", lit(1L), e.cast("int"))
+
   /** The trailing-`w` slice of the dense daily count series,
     * re-indexed t = 1..n ascending — the shared head of the batch-U
     * forecasters. Truncating to a fixed tail is what makes the
@@ -4820,13 +4827,6 @@ object Events {
     * < 2^−w — below every surfaced grid. Windows here order DAYS
     * (spine-bounded), never rows.
     */
-  /** 2^e as an exact LONG via a bit shift (e ≤ 62) — the dyadic-
-    * weight primitive: ratios of these are exactly-representable
-    * powers of two in both engines, with no libm pow anywhere.
-    */
-  private def pow2(e: org.apache.spark.sql.Column) =
-    call_function("shiftleft", lit(1L), e.cast("int"))
-
   private def dailyTail(s: SparkSession, dir: String, w: Int)
   : DataFrame = {
     dailySeries(Tables.events(s, dir))(count(lit(1)).as("y"))
@@ -6477,6 +6477,7 @@ object Events {
   def poissonGlmTrend(s: SparkSession, dir: String,
                       rounds: Int = 3): DataFrame = {
     val dense = dailySeries(Tables.events(s, dir))(count(lit(1)).as("y"))
+      .localCheckpoint() // read by every Newton round: aggregate events once
     val q9 = (c: org.apache.spark.sql.Column) =>
       floor(c * lit(1e9) + lit(0.5)) / lit(1e9)
     var state = dense

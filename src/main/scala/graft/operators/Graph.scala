@@ -108,16 +108,6 @@ object Graph {
     edges.select(col("src").cast("long"), col("dst").cast("long"))
       .rdd.map(r => (r.getLong(0), r.getLong(1)))
 
-  /** Multi-source personalized PageRank. `edges(src, dst)`; returns
-    * `(id, rank_0 .. rank_{sources.size-1})`, one rank column per source.
-    *
-    * Semantics as the reference (`RunPersonalizedPageRankBasic.java
-    * :291-370`, linear space): per iteration each node scatters
-    * rank/outdeg to its out-neighbors; ALL teleport mass and ALL
-    * missing (dangling) mass return to the source node itself:
-    * source slot = alpha + (1-alpha)*(received + missing),
-    * other nodes = (1-alpha)*received.
-    */
   /** Run `body` with `spark.sql.shuffle.partitions` pinned to `p` and
     * AQE off — the PPR loop materializes per iteration (localCheckpoint
     * + observed scalars), so the conf at action time is what counts.
@@ -137,6 +127,16 @@ object Graph {
     try body finally prev.foreach { case (k, v) => s.conf.set(k, v) }
   }
 
+  /** Multi-source personalized PageRank. `edges(src, dst)`; returns
+    * `(id, rank_0 .. rank_{sources.size-1})`, one rank column per source.
+    *
+    * Semantics as the reference (`RunPersonalizedPageRankBasic.java
+    * :291-370`, linear space): per iteration each node scatters
+    * rank/outdeg to its out-neighbors; ALL teleport mass and ALL
+    * missing (dangling) mass return to the source node itself:
+    * source slot = alpha + (1-alpha)*(received + missing),
+    * other nodes = (1-alpha)*received.
+    */
   def personalizedPageRank(edges: DataFrame, sources: Seq[Long],
                            iterations: Int, alpha: Double = 0.15,
                            danglingFree: Boolean = false): DataFrame = {
@@ -283,17 +283,6 @@ object Graph {
       .drop("rn")
   }
 
-  /** Connected components by iterative min-label propagation (edges
-    * treated as undirected): every node adopts the minimum component id
-    * among itself and its neighbors until a fixpoint. Same RDD-loop
-    * shape as PPR: structure cached and partitioned once, labels shuffle.
-    * A pointer-jumping step after each propagation collapses label
-    * chains exponentially, so rounds are O(log diameter) rather than
-    * O(diameter) — the property that keeps the loop bounded on 100 TB
-    * path-shaped graphs (small/large-star would be the next step up,
-    * same join-shape machinery). Convergence is one scalar count rolled
-    * into the round's single action.
-    */
   /** Driver-side union-find for edge sets below `driverCutoff`: the
     * label-propagation loop pays ~3 shuffle rounds of cluster-wide
     * scheduling regardless of size, which for the kilobyte-scale pair
@@ -328,6 +317,17 @@ object Graph {
     StructField("id", LongType, nullable = false),
     StructField("comp", LongType, nullable = false)))
 
+  /** Connected components by iterative min-label propagation (edges
+    * treated as undirected): every node adopts the minimum component id
+    * among itself and its neighbors until a fixpoint. Same RDD-loop
+    * shape as PPR: structure cached and partitioned once, labels shuffle.
+    * A pointer-jumping step after each propagation collapses label
+    * chains exponentially, so rounds are O(log diameter) rather than
+    * O(diameter) — the property that keeps the loop bounded on 100 TB
+    * path-shaped graphs (small/large-star would be the next step up,
+    * same join-shape machinery). Convergence is one scalar count rolled
+    * into the round's single action.
+    */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
                           driverCutoff: Int = 10000): DataFrame = {
     val s = edges.sparkSession
@@ -1089,16 +1089,6 @@ object Graph {
           .otherwise(lit(0.0)).as("alpha"))
   }
 
-  /** Multi-hop BFS distances from one source over the undirected
-    * customer⇄supplier graph: (id, dist) for every vertex within
-    * `maxHops`. The frontier loop is the textbook distributed BFS —
-    * per hop one equality join of the (cached, pinned-partition) edge
-    * list against the CURRENT frontier only, anti-joined against the
-    * visited set, so each round moves |frontier| rows, never the
-    * graph. The DuckDB restatement is a recursive CTE with the same
-    * min-distance semantics — a coverage point for iterative reach
-    * queries (the reference's PPR loop is the weighted cousin).
-    */
   /** The ONE multi-source frontier kernel behind [[bfsDistances]],
     * [[eccentricitySample]], [[harmonicCentrality]] and
     * [[shortestPathCounts]]: returns (source, id, dist, n_paths) for
@@ -1156,6 +1146,16 @@ object Graph {
     rings
   }
 
+  /** Multi-hop BFS distances from one source over the undirected
+    * customer⇄supplier graph: (id, dist) for every vertex within
+    * `maxHops`. The frontier loop is the textbook distributed BFS —
+    * per hop one equality join of the (cached, pinned-partition) edge
+    * list against the CURRENT frontier only, anti-joined against the
+    * visited set, so each round moves |frontier| rows, never the
+    * graph. The DuckDB restatement is a recursive CTE with the same
+    * min-distance semantics — a coverage point for iterative reach
+    * queries (the reference's PPR loop is the weighted cousin).
+    */
   def bfsDistances(s: SparkSession, dir: String, source: Long,
                    maxHops: Int = 4): DataFrame =
     edgeLoop(customerSupplierEdges(s, dir), Some("src")) { g =>

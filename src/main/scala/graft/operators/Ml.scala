@@ -163,12 +163,6 @@ object Ml {
       .select(round(col("num") / (col("np") * col("nn")), 6).as("auc"))
   }
 
-  /** queries-surface helpers with fixed featurization over `documents`.
-    * Weights are rounded to 6dp for the oracle compare: the DuckDB fold
-    * sums each instance's score in vocabulary order while the Scala fold
-    * sums in token order, a ~1e-15 relative difference that 6dp absorbs.
-    */
-
   /** Per-process memo of the sequential trainer's weights, keyed by
     * (session, dir, seed, delta). Five metric queries (sgd_apply,
     * confusion_matrix, prf_metrics, calibration_bins, sgd_auc) derive
@@ -198,6 +192,11 @@ object Ml {
     w.toSeq.toDF("feature", "weight")
   }
 
+  /** queries-surface helpers with fixed featurization over `documents`.
+    * Weights are rounded to 6dp for the oracle compare: the DuckDB fold
+    * sums each instance's score in vocabulary order while the Scala fold
+    * sums in token order, a ~1e-15 relative difference that 6dp absorbs.
+    */
   def trainQuery(s: SparkSession, dir: String,
                  shuffleSeed: Option[Long] = None): DataFrame =
     trainedModel(s, dir, shuffleSeed)
@@ -231,15 +230,6 @@ object Ml {
       .groupBy(col("label"), col("pred"))
       .agg(count(lit(1)).as("cnt"))
 
-  /** Calibration table (reliability-diagram bins) of the single-model
-    * classifier: sigmoid the margin into p∈(0,1), decile-bin, and per
-    * bin report count, mean predicted probability, and the empirical
-    * positive rate — the curve that says whether scores are usable as
-    * probabilities. Binning cuts on `floor(round(p·10, 5))` — rounded
-    * BEFORE the floor so a last-ulp `exp` difference between engines
-    * can't flip a bin — clamped so p=1 lands in the top bin. One
-    * partial-agg shuffle over ≤10 keys on top of the scored frame.
-    */
   /** Precision/recall/F1/accuracy of the single-model classifier
     * (positive class = spam ≡ label 1.0), derived from the same four
     * confusion cells `confusionQuery` emits — one conditional-count
@@ -306,6 +296,15 @@ object Ml {
       .withColumn("pred", when(col("llr") > 0, "en").otherwise("other"))
   }
 
+  /** Calibration table (reliability-diagram bins) of the single-model
+    * classifier: sigmoid the margin into p∈(0,1), decile-bin, and per
+    * bin report count, mean predicted probability, and the empirical
+    * positive rate — the curve that says whether scores are usable as
+    * probabilities. Binning cuts on `floor(round(p·10, 5))` — rounded
+    * BEFORE the floor so a last-ulp `exp` difference between engines
+    * can't flip a bin — clamped so p=1 lands in the top bin. One
+    * partial-agg shuffle over ≤10 keys on top of the scored frame.
+    */
   def calibrationBins(s: SparkSession, dir: String): DataFrame = {
     val p = lit(1.0) / (lit(1.0) + exp(-col("score")))
     applyQuery(s, dir)

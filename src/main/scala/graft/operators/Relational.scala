@@ -1157,13 +1157,6 @@ object Relational {
         col("sum_qty").cast("double").as("sum_qty"))
   }
 
-  /** Deterministic per-group mode: the most frequent l_returnflag per
-    * order priority, ties to the lexicographically smaller value — a
-    * count aggregation plus a 1-row-per-group rank filter (plans as
-    * WindowGroupLimit: each map task keeps its local best before the
-    * per-group shuffle). Built-in `mode()` is tie-nondeterministic in
-    * both engines, so the restatement IS the operator.
-    */
   /** TPC-H Q8 shape (national market share): within one region's
     * customers and one part type, the fraction of yearly revenue
     * supplied by a given nation. Adapted to the fixture schema (no
@@ -1438,6 +1431,13 @@ object Relational {
     one.select(explode(array(entries: _*)).as("p")).select(col("p.*"))
   }
 
+  /** Deterministic per-group mode: the most frequent l_returnflag per
+    * order priority, ties to the lexicographically smaller value — a
+    * count aggregation plus a 1-row-per-group rank filter (plans as
+    * WindowGroupLimit: each map task keeps its local best before the
+    * per-group shuffle). Built-in `mode()` is tie-nondeterministic in
+    * both engines, so the restatement IS the operator.
+    */
   def modeAgg(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // Hand partial-agg pushdown: collapse lineitem to one row per

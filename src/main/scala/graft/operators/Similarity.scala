@@ -40,20 +40,33 @@ object Similarity {
     * any ANN variant must beat, and the correctness oracle for them.
     */
   def bruteForceTopK(s: SparkSession, dir: String,
-                     numQueries: Int, k: Int): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val q = emb.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val scored = emb.crossJoin(broadcast(q))
+                     numQueries: Int, k: Int): DataFrame =
+    exactTopK(Tables.embeddings(s, dir).select("vec_id", "embedding"),
+      numQueries, k)
+      .select(col("query_id"), col("vec_id"), round(col("sim"), 6).as("sim"))
+
+  /** [[bruteForceTopK]] over `emb` (`vec_id`, `embedding`), unrounded and
+    * ranked: `(query_id, vec_id, sim, rank)`, the ground truth the
+    * recall sweeps rank the IVF candidates against.
+    */
+  private def exactTopK(emb: DataFrame, numQueries: Int, k: Int): DataFrame =
+    topK(emb.crossJoin(broadcast(queries(emb, numQueries)))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
-        cosine(col("embedding"), col("qv")).as("sim"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("vec_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("vec_id"), round(col("sim"), 6).as("sim"))
-  }
+        cosine(col("embedding"), col("qv")).as("sim")), k)
+
+  /** The query vectors `vec_id < numQueries` as `(query_id, qv)`. */
+  private def queries(emb: DataFrame, numQueries: Int): DataFrame =
+    emb.filter(col("vec_id") < numQueries)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+
+  /** Each query's `k` most similar vectors by (`sim` desc, `vec_id`),
+    * every column kept plus their `rank` (1 = nearest).
+    */
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(Window.partitionBy("query_id")
+      .orderBy(col("sim").desc, col("vec_id"))))
+      .filter(col("rank") <= k)
 
   /** Embedding-cosine near-duplicate pairs: all vector pairs with
     * similarity ≥ threshold. Exact all-pairs here (corpus fits one
@@ -121,47 +134,62 @@ object Similarity {
   /** IVF-style approximate top-k: coarse centroids = the first
     * `numCentroids` corpus vectors (deterministic stand-in for k-means —
     * the assignment/probe machinery is identical); every vector is
-    * assigned to its nearest centroid once (broadcast argmax, no
-    * shuffle of the corpus); a query probes only its `nprobe` nearest
-    * centroids' inverted lists. Search cost drops by
-    * ~numCentroids/nprobe at equal plumbing.
+    * assigned to its nearest centroid once ([[invertedLists]]); a query
+    * probes only its `nprobe` nearest centroids' inverted lists. Search
+    * cost drops by ~numCentroids/nprobe at equal plumbing.
     */
   def ivfTopK(s: SparkSession, dir: String, numQueries: Int, k: Int,
               numCentroids: Int = 16, nprobe: Int = 4): DataFrame = {
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val cent = emb.filter(col("vec_id") < numCentroids)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"))
-    // inverted lists: nearest centroid per vector
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("csim").desc, col("centroid_id"))
-    val assigned = emb.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("embedding"), col("centroid_id"),
-        cosine(col("embedding"), col("cv")).as("csim"))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
-      .select("vec_id", "embedding", "centroid_id")
-    // probe set: nprobe nearest centroids per query
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("csim").desc, col("centroid_id"))
-    val probes = emb.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      .crossJoin(broadcast(cent))
-      .select(col("query_id"), col("qv"), col("centroid_id"),
-        cosine(col("qv"), col("cv")).as("csim"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
-      .select("query_id", "qv", "centroid_id")
-    // search only the probed lists
-    val wTop = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("vec_id"))
-    assigned.join(broadcast(probes), Seq("centroid_id"))
-      .filter(col("vec_id") =!= col("query_id"))
+    val cent = centroids(emb, numCentroids)
+    val probes = nearestCentroids(queries(emb, numQueries), "query_id", "qv",
+      cent, nprobe)
+    topK(candidates(invertedLists(emb, cent), broadcast(probes))
       .select(col("query_id"), col("vec_id"),
-        cosine(col("embedding"), col("qv")).as("sim"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= k)
+        cosine(col("embedding"), col("qv")).as("sim")), k)
       .select(col("query_id"), col("vec_id"), round(col("sim"), 6).as("sim"))
   }
+
+  /** IVF coarse centroids: the first `c` corpus vectors as
+    * `(centroid_id, cv)`.
+    */
+  private def centroids(emb: DataFrame, c: Int): DataFrame =
+    emb.filter(col("vec_id") < c)
+      .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"))
+
+  /** The `n` nearest centroids of every row of `rows` by cosine of its
+    * `vec` column, ties to the smaller `centroid_id`: every input
+    * column, plus `centroid_id` and its rank `pr` (1 = nearest). The
+    * centroids broadcast onto one scan of `rows`; the top-n per `id` is
+    * a partial WindowGroupLimit, an Exchange hashpartitioning(`id`), then
+    * the final WindowGroupLimit and the Window. So every row crosses one
+    * shuffle carrying every column it keeps: the corpus assignment
+    * ships each embedding once.
+    */
+  private def nearestCentroids(rows: DataFrame, id: String, vec: String,
+                               cent: DataFrame, n: Int): DataFrame =
+    rows.crossJoin(broadcast(cent))
+      .select(rows.columns.map(col) :+ col("centroid_id") :+
+        cosine(col(vec), col("cv")).as("csim"): _*)
+      .withColumn("pr", row_number().over(Window.partitionBy(id)
+        .orderBy(col("csim").desc, col("centroid_id"))))
+      .filter(col("pr") <= n)
+      .drop("csim")
+
+  /** IVF inverted lists: every corpus row of `emb` (`vec_id`,
+    * `embedding`, …) with its nearest centroid's `centroid_id`.
+    */
+  private def invertedLists(emb: DataFrame, cent: DataFrame): DataFrame =
+    nearestCentroids(emb, "vec_id", "embedding", cent, 1).drop("pr")
+
+  /** IVF candidates: every vector of a probed inverted list paired with
+    * the query (`query_id`) that probed it, the query itself excluded.
+    * The caller hints the probe side: broadcast for a bounded query set,
+    * shuffle_hash when every vector is a query.
+    */
+  private def candidates(lists: DataFrame, probes: DataFrame): DataFrame =
+    lists.join(probes, Seq("centroid_id"))
+      .filter(col("vec_id") =!= col("query_id"))
 
   /** IVF nprobe tuning sweep (W492): recall@k AND candidate volume at
     * nprobe ∈ {1,2,4,8} from ONE assignment pass — the table an ANN
@@ -181,29 +209,10 @@ object Similarity {
                         numCentroids: Int = 16,
                         probes: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val cent = emb.filter(col("vec_id") < numCentroids)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("csim").desc, col("centroid_id"))
-    val assigned = emb.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("embedding"), col("centroid_id"),
-        cosine(col("embedding"), col("cv")).as("csim"))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
-      .select("vec_id", "embedding", "centroid_id")
-    val pmax = probes.max
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("csim").desc, col("centroid_id"))
-    val plist = emb.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      .crossJoin(broadcast(cent))
-      .select(col("query_id"), col("qv"), col("centroid_id"),
-        cosine(col("qv"), col("cv")).as("csim"))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= pmax)
-      .select("query_id", "qv", "centroid_id", "pr")
-    val swept = assigned.join(broadcast(plist), Seq("centroid_id"))
-      .filter(col("vec_id") =!= col("query_id"))
+    val cent = centroids(emb, numCentroids)
+    val plist = nearestCentroids(queries(emb, numQueries), "query_id", "qv",
+      cent, probes.max)
+    val swept = candidates(invertedLists(emb, cent), broadcast(plist))
       .select(col("query_id"), col("vec_id"), col("pr"),
         cosine(col("embedding"), col("qv")).as("sim"))
       .select(col("query_id"), col("vec_id"), col("sim"), col("pr"),
@@ -269,42 +278,18 @@ object Similarity {
     import s.implicits._
     val kmax = ks.max
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val cent = emb.filter(col("vec_id") < numCentroids)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("csim").desc, col("centroid_id"))
-    val assigned = emb.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("embedding"), col("centroid_id"),
-        cosine(col("embedding"), col("cv")).as("csim"))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
-      .select("vec_id", "embedding", "centroid_id")
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("csim").desc, col("centroid_id"))
-    val queries = emb.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val plist = queries.crossJoin(broadcast(cent))
-      .select(col("query_id"), col("qv"), col("centroid_id"),
-        cosine(col("qv"), col("cv")).as("csim"))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= nprobe)
-      .select("query_id", "qv", "centroid_id")
-    val cand = assigned.join(broadcast(plist), Seq("centroid_id"))
-      .filter(col("vec_id") =!= col("query_id"))
+    val cent = centroids(emb, numCentroids)
+    val plist = nearestCentroids(queries(emb, numQueries), "query_id", "qv",
+      cent, nprobe)
+    val cand = candidates(invertedLists(emb, cent), broadcast(plist))
       .select(col("query_id"), col("vec_id"),
         cosine(col("embedding"), col("qv")).as("sim"))
       .persist()
     CacheScope.register(cand) // eager: count + ranked read it
-    val wRank = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("vec_id"))
-    val approx = cand.withColumn("ra", row_number().over(wRank))
-      .filter(col("ra") <= kmax).select("query_id", "vec_id", "ra")
-    val truth = emb.crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cosine(col("embedding"), col("qv")).as("sim"))
-      .withColumn("rt", row_number().over(wRank))
-      .filter(col("rt") <= kmax).select("query_id", "vec_id", "rt")
+    val approx = topK(cand, kmax)
+      .select(col("query_id"), col("vec_id"), col("rank").as("ra"))
+    val truth = exactTopK(emb, numQueries, kmax)
+      .select(col("query_id"), col("vec_id"), col("rank").as("rt"))
     val nCand = cand.agg(count(lit(1)).as("n_candidates"))
     val spine = ks.map(_.toLong).toDF("k")
     val hits = approx.join(truth, Seq("query_id", "vec_id"))
@@ -337,46 +322,19 @@ object Similarity {
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
       .persist()
     CacheScope.register(emb) // every sweep point scans it
-    val queries = emb.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val wRank = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("vec_id"))
-    val truth = emb.crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cosine(col("embedding"), col("qv")).as("sim"))
-      .withColumn("rt", row_number().over(wRank))
-      .filter(col("rt") <= k).select("query_id", "vec_id")
+    val truth = exactTopK(emb, numQueries, k).select("query_id", "vec_id")
       .persist()
     CacheScope.register(truth) // joined by every sweep point
     cs.map { c =>
-      val cent = emb.filter(col("vec_id") < c)
-        .select(col("vec_id").as("centroid_id"),
-          col("embedding").as("cv"))
-      val wAssign = Window.partitionBy("vec_id")
-        .orderBy(col("csim").desc, col("centroid_id"))
-      val assigned = emb.crossJoin(broadcast(cent))
-        .select(col("vec_id"), col("embedding"), col("centroid_id"),
-          cosine(col("embedding"), col("cv")).as("csim"))
-        .withColumn("rn", row_number().over(wAssign))
-        .filter(col("rn") === 1)
-        .select("vec_id", "embedding", "centroid_id")
-      val wProbe = Window.partitionBy("query_id")
-        .orderBy(col("csim").desc, col("centroid_id"))
-      val plist = queries.crossJoin(broadcast(cent))
-        .select(col("query_id"), col("qv"), col("centroid_id"),
-          cosine(col("qv"), col("cv")).as("csim"))
-        .withColumn("pr", row_number().over(wProbe))
-        .filter(col("pr") <= nprobe)
-        .select("query_id", "qv", "centroid_id")
-      val cand = assigned.join(broadcast(plist), Seq("centroid_id"))
-        .filter(col("vec_id") =!= col("query_id"))
+      val cent = centroids(emb, c)
+      val plist = nearestCentroids(queries(emb, numQueries), "query_id",
+        "qv", cent, nprobe)
+      val cand = candidates(invertedLists(emb, cent), broadcast(plist))
         .select(col("query_id"), col("vec_id"),
           cosine(col("embedding"), col("qv")).as("sim"))
         .persist()
       CacheScope.register(cand) // count + ranked read it
-      val approx = cand.withColumn("ra", row_number().over(wRank))
-        .filter(col("ra") <= k).select("query_id", "vec_id")
+      val approx = topK(cand, k).select("query_id", "vec_id")
       val hits = approx.join(truth, Seq("query_id", "vec_id"))
         .agg(count(lit(1)).as("hits"))
       val nCand = cand.agg(count(lit(1)).as("n_candidates"))
@@ -751,16 +709,6 @@ object Similarity {
         col("label").as("neg_label"), round(col("sim"), 6).as("sim"))
   }
 
-  /** IVF inverted-list balance audit (W233): vectors per centroid for
-    * the exact assignment `ivfTopK` searches, including EMPTY lists —
-    * the index-health table read next to `annRecall` before an
-    * approximate index ships (a load factor ≫ 1 on one list means
-    * probe cost concentrates there and recall collapses elsewhere;
-    * empty lists mean wasted probes). `load_factor` is the occupancy
-    * relative to perfect balance (n·C/total, 1.0 = uniform). Same
-    * broadcast-centroids × one-scan argmax plan as the index build
-    * itself; the rollup shuffles C rows.
-    */
   /** Int8-quantization recall audit (W237): top-`k` retrieval recall
     * when the CORPUS side is affine-int8 quantized ([[quantizeInt8]]'s
     * exact scheme, reconstructed values) and queries stay full
@@ -792,14 +740,10 @@ object Similarity {
       .select(col("query_id"), col("vec_id"))
     val q = emb.filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val wTop = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("vec_id"))
-    val approx = rec.crossJoin(broadcast(q))
+    val approx = topK(rec.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
-        cosine(col("rv"), col("qv")).as("sim"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= k)
+        cosine(col("rv"), col("qv")).as("sim")), k)
       .select(col("query_id"), col("vec_id"), lit(1L).as("hit"))
     exact.join(approx, Seq("query_id", "vec_id"), "left")
       .groupBy("query_id")
@@ -809,18 +753,22 @@ object Similarity {
       .orderBy("query_id")
   }
 
+  /** IVF inverted-list balance audit (W233): vectors per centroid for
+    * the exact assignment `ivfTopK` searches, including EMPTY lists —
+    * the index-health table read next to `annRecall` before an
+    * approximate index ships (a load factor ≫ 1 on one list means
+    * probe cost concentrates there and recall collapses elsewhere;
+    * empty lists mean wasted probes). `load_factor` is the occupancy
+    * relative to perfect balance (n·C/total, 1.0 = uniform). Same
+    * [[invertedLists]] as the index build, but only ids reach its
+    * exchange (the embedding is pruned before it); the rollup shuffles
+    * C rows.
+    */
   def ivfBalance(s: SparkSession, dir: String,
                  numCentroids: Int = 16): DataFrame = {
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val cent = emb.filter(col("vec_id") < numCentroids)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("csim").desc, col("centroid_id"))
-    val counts = emb.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("centroid_id"),
-        cosine(col("embedding"), col("cv")).as("csim"))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
+    val cent = centroids(emb, numCentroids)
+    val counts = invertedLists(emb, cent)
       .groupBy("centroid_id").agg(count(lit(1)).as("nv"))
     cent.select("centroid_id")
       .join(counts, Seq("centroid_id"), "left")
@@ -902,37 +850,14 @@ object Similarity {
                           nprobe: Int = 4): DataFrame = {
     val emb = Tables.embeddings(s, dir)
       .select("vec_id", "embedding", "label")
-    val cent = emb.filter(col("vec_id") < numCentroids)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("csim").desc, col("centroid_id"))
-    val assigned = emb.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("embedding"), col("label"),
-        col("centroid_id"),
-        cosine(col("embedding"), col("cv")).as("csim"))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
-      .select("vec_id", "embedding", "label", "centroid_id")
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("csim").desc, col("centroid_id"))
-    val probes = emb
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("label").as("qlabel"))
-      .crossJoin(broadcast(cent))
-      .select(col("query_id"), col("qv"), col("qlabel"),
-        col("centroid_id"), cosine(col("qv"), col("cv")).as("csim"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
-      .select("query_id", "qv", "qlabel", "centroid_id")
-    val wTop = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("vec_id"))
-    val perQuery = assigned
-      .join(probes.hint("shuffle_hash"), Seq("centroid_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("qlabel"), col("vec_id"), col("label"),
-        cosine(col("embedding"), col("qv")).as("sim"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= k)
+    val cent = centroids(emb, numCentroids)
+    val probes = nearestCentroids(emb.select(col("vec_id").as("query_id"),
+      col("embedding").as("qv"), col("label").as("qlabel")),
+      "query_id", "qv", cent, nprobe)
+    val perQuery = topK(
+      candidates(invertedLists(emb, cent), probes.hint("shuffle_hash"))
+        .select(col("query_id"), col("qlabel"), col("vec_id"), col("label"),
+          cosine(col("embedding"), col("qv")).as("sim")), k)
       .groupBy("query_id", "qlabel")
       .agg(count(lit(1)).as("kn"),
         sum(when(col("label") === col("qlabel"), 1L).otherwise(0L))
@@ -1211,35 +1136,16 @@ object Similarity {
     */
   def mutualNnPairs(s: SparkSession, dir: String,
                     numCentroids: Int = 16, nprobe: Int = 4): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-      .select("vec_id", "embedding", "label")
-    val cent = emb.filter(col("vec_id") < numCentroids)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("csim").desc, col("centroid_id"))
-    val assigned = emb.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("embedding"), col("centroid_id"),
-        cosine(col("embedding"), col("cv")).as("csim"))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
-      .select("vec_id", "embedding", "centroid_id")
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("csim").desc, col("centroid_id"))
-    val probes = emb
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      .crossJoin(broadcast(cent))
-      .select(col("query_id"), col("qv"), col("centroid_id"),
-        cosine(col("qv"), col("cv")).as("csim"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
-      .select("query_id", "qv", "centroid_id")
+    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
+    val cent = centroids(emb, numCentroids)
+    val probes = nearestCentroids(emb.select(col("vec_id").as("query_id"),
+      col("embedding").as("qv")), "query_id", "qv", cent, nprobe)
     val di = floor((lit(1.0) - cosine(col("embedding"), col("qv"))) *
       lit(1e9) + lit(0.5)).cast("long")
     val wTop = Window.partitionBy("query_id")
       .orderBy(col("di"), col("vec_id"))
-    val top1 = assigned
-      .join(probes.hint("shuffle_hash"), Seq("centroid_id"))
-      .filter(col("vec_id") =!= col("query_id"))
+    val top1 = candidates(invertedLists(emb, cent),
+      probes.hint("shuffle_hash"))
       .select(col("query_id"), col("vec_id"), di.as("di"))
       .withColumn("rn", row_number().over(wTop))
       .filter(col("rn") === 1)
@@ -1279,34 +1185,16 @@ object Similarity {
                topn: Int = 20): DataFrame = {
     val emb = Tables.embeddings(s, dir)
       .select("vec_id", "embedding", "label")
-    val cent = emb.filter(col("vec_id") < numCentroids)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("csim").desc, col("centroid_id"))
-    val assigned = emb.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("embedding"), col("centroid_id"),
-        cosine(col("embedding"), col("cv")).as("csim"))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
-      .select("vec_id", "embedding", "centroid_id")
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("csim").desc, col("centroid_id"))
-    val probes = emb
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      .crossJoin(broadcast(cent))
-      .select(col("query_id"), col("qv"), col("centroid_id"),
-        cosine(col("qv"), col("cv")).as("csim"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
-      .select("query_id", "qv", "centroid_id")
+    val cent = centroids(emb, numCentroids)
+    val probes = nearestCentroids(emb.select(col("vec_id").as("query_id"),
+      col("embedding").as("qv")), "query_id", "qv", cent, nprobe)
     // candidate distances on the 1e-9 grid; k nearest by (grid, id)
     val di = floor((lit(1.0) - cosine(col("embedding"), col("qv"))) *
       lit(1e9) + lit(0.5)).cast("long")
     val wTop = Window.partitionBy("query_id")
       .orderBy(col("di"), col("vec_id"))
-    val topk = CacheScope.track(assigned
-      .join(probes.hint("shuffle_hash"), Seq("centroid_id"))
-      .filter(col("vec_id") =!= col("query_id"))
+    val topk = CacheScope.track(candidates(invertedLists(emb, cent),
+      probes.hint("shuffle_hash"))
       .select(col("query_id"), col("vec_id"), di.as("di"))
       .withColumn("rn", row_number().over(wTop))
       .filter(col("rn") <= k)
@@ -1721,41 +1609,19 @@ object Similarity {
                          numCentroids: Int = 16,
                          nprobe: Int = 4): DataFrame = {
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val cent = emb.filter(col("vec_id") < numCentroids)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("csim").desc, col("centroid_id"))
-    val assigned = emb.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("embedding"), col("centroid_id"),
-        cosine(col("embedding"), col("cv")).as("csim"))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
-      .select("vec_id", "embedding", "centroid_id")
-    val wProbe = Window.partitionBy("qid")
-      .orderBy(col("csim").desc, col("centroid_id"))
-    val probes = emb
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      .crossJoin(broadcast(cent))
-      .select(col("qid"), col("qv"), col("centroid_id"),
-        cosine(col("qv"), col("cv")).as("csim"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
-      .select("qid", "qv", "centroid_id")
-    val top2 = assigned
-      .join(probes.hint("shuffle_hash"), Seq("centroid_id"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        cosine(col("embedding"), col("qv")).as("sim"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("qid")
-          .orderBy(col("sim").desc, col("vec_id"))))
-      .filter(col("rn") <= 2)
-      .select(col("qid"), col("rn"),
+    val cent = centroids(emb, numCentroids)
+    val probes = nearestCentroids(emb.select(col("vec_id").as("query_id"),
+      col("embedding").as("qv")), "query_id", "qv", cent, nprobe)
+    val top2 = topK(
+      candidates(invertedLists(emb, cent), probes.hint("shuffle_hash"))
+        .select(col("query_id"), col("vec_id"),
+          cosine(col("embedding"), col("qv")).as("sim")), 2)
+      .select(col("query_id"), col("rank"),
         floor((lit(1.0) - col("sim")) * lit(1e9) + lit(0.5))
           .cast("long").as("d9"))
-    val mu = top2.groupBy("qid")
-      .agg(min(when(col("rn") === 1, col("d9"))).as("d1"),
-        min(when(col("rn") === 2, col("d9"))).as("d2"))
+    val mu = top2.groupBy("query_id")
+      .agg(min(when(col("rank") === 1, col("d9"))).as("d1"),
+        min(when(col("rank") === 2, col("d9"))).as("d2"))
     val valid = mu.filter(col("d1") > 0 && col("d2").isNotNull)
       .select(floor(log(col("d2").cast("double") /
         col("d1").cast("double")) * lit(1e9) + lit(0.5)).cast("long")

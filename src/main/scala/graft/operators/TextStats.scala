@@ -522,17 +522,6 @@ object TextStats {
       .orderBy("b")
   }
 
-  /** First BPE merge iteration: corpus-wide counts of adjacent
-    * SYMBOL pairs within each token (symbols = characters at
-    * iteration 0), top-`k` pairs — the candidate table a byte-pair-
-    * encoding tokenizer trainer merges from. Each token explodes by
-    * position and every pair is one codegen'd 2-char substr (no split
-    * array, no join), so the only shuffle is the final pair-count
-    * aggregation —
-    * map-side partial combine does the heavy lifting exactly like
-    * word_count. Subsequent BPE iterations would re-run this over the
-    * merged symbol stream; the per-iteration plan is identical.
-    */
   /** Second BPE iteration: apply iteration 0's WINNING merge (top
     * pair by count, ties to the lexicographically smaller pair) to
     * every token's symbol stream with the greedy left-to-right scan
@@ -571,6 +560,17 @@ object TextStats {
       .limit(k)
   }
 
+  /** First BPE merge iteration: corpus-wide counts of adjacent
+    * SYMBOL pairs within each token (symbols = characters at
+    * iteration 0), top-`k` pairs — the candidate table a byte-pair-
+    * encoding tokenizer trainer merges from. Each token explodes by
+    * position and every pair is one codegen'd 2-char substr (no split
+    * array, no join), so the only shuffle is the final pair-count
+    * aggregation —
+    * map-side partial combine does the heavy lifting exactly like
+    * word_count. Subsequent BPE iterations would re-run this over the
+    * merged symbol stream; the per-iteration plan is identical.
+    */
   def bpePairCounts(s: SparkSession, dir: String, k: Int = 40): DataFrame = {
     val toks = tokenized(s, dir)
       .select(explode(col("ts")).as("tok"))
@@ -592,17 +592,6 @@ object TextStats {
       .limit(k)
   }
 
-  /** Tokenizer fertility by language (W224): the per-language cost
-    * table a pipeline checks before committing to a tokenizer — how
-    * many subword ("BPE-ish" regex) tokens each whitespace word and
-    * each character expands into. High-fertility languages burn context
-    * window and training budget; this is the table that decision reads.
-    * Sufficient statistics (doc/word/subword/char counts) are EXACT
-    * integer sums; each surfaced ratio is one double division then the
-    * grid quantize, so both engines agree bitwise. One scan, one
-    * 5-group shuffle — nothing here grows with corpus size except the
-    * scan itself.
-    */
   /** Term burstiness (W230): the Fano factor (variance-to-mean ratio)
     * of each top-`k` term's per-document count distribution — Church &
     * Gale's classic content-vs-function-word separator (a term whose
@@ -666,6 +655,17 @@ object TextStats {
       .orderBy("source", "n")
   }
 
+  /** Tokenizer fertility by language (W224): the per-language cost
+    * table a pipeline checks before committing to a tokenizer — how
+    * many subword ("BPE-ish" regex) tokens each whitespace word and
+    * each character expands into. High-fertility languages burn context
+    * window and training budget; this is the table that decision reads.
+    * Sufficient statistics (doc/word/subword/char counts) are EXACT
+    * integer sums; each surfaced ratio is one double division then the
+    * grid quantize, so both engines agree bitwise. One scan, one
+    * 5-group shuffle — nothing here grows with corpus size except the
+    * scan itself.
+    */
   def tokenizerFertility(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .select(col("lang"),

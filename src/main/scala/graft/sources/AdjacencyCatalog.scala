@@ -222,17 +222,6 @@ object CatalogAudit {
         .foreach(java.nio.file.Files.deleteIfExists(_))
   }
 
-  /** Creates an adjacency table through [[AdjacencyCatalog]] with
-    * CTAS (`writeTo(...).create()` — edges (region → nation) from the
-    * nation fixture), then REPLACES the src ≥ 2 key range with
-    * reversed (nation → region) edges via
-    * `writeTo(...).overwrite($"src" >= 2)` — Catalyst translates the
-    * condition to source filters, the connector rewrites surviving
-    * lines as a distributed per-file job, and the new data appends.
-    * Readback through `spark.table` resolves the same catalog. The
-    * census must equal: original edges with src < 2 ∪ replacement
-    * edges.
-    */
   /** The W534 gate query: dynamic pruning through
     * `SupportsRuntimeFiltering` — (nation → region) edges staged as an
     * adjacency table, joined to the nation dim filtered on a NON-join
@@ -514,6 +503,17 @@ object CatalogAudit {
     }
   }
 
+  /** Creates an adjacency table through [[AdjacencyCatalog]] with
+    * CTAS (`writeTo(...).create()` — edges (region → nation) from the
+    * nation fixture), then REPLACES the src ≥ 2 key range with
+    * reversed (nation → region) edges via
+    * `writeTo(...).overwrite($"src" >= 2)` — Catalyst translates the
+    * condition to source filters, the connector rewrites surviving
+    * lines as a distributed per-file job, and the new data appends.
+    * Readback through `spark.table` resolves the same catalog. The
+    * census must equal: original edges with src < 2 ∪ replacement
+    * edges.
+    */
   def overwriteAudit(s: SparkSession, dir: String): DataFrame = {
     val root = java.nio.file.Files
       .createTempDirectory("graft_cat_ow").toString

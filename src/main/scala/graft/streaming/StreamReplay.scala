@@ -270,14 +270,6 @@ object StreamReplay {
         round(col("sum_value"), 4).as("sum_value"))
   }
 
-  /** Event-time TIMEOUT gate: sessions close when the WATERMARK
-    * passes last-event + gap (`StreamOps.sessionizeEventTime`), so
-    * after the flush sentinel pushes the watermark past every armed
-    * timeout, the sink holds EVERY session — including each user's
-    * final one, which the successor-closed replay above structurally
-    * cannot emit. The oracle is therefore the full batch sessionize
-    * restatement, no exclusions.
-    */
   /** W506 gate: `transformWithState` distinct-type census (Update
     * mode). TWS runs only on the RocksDB state store provider — set
     * for this query, restored after (the rest of the board stays on
@@ -442,6 +434,14 @@ object StreamReplay {
     }
   }
 
+  /** Event-time TIMEOUT gate: sessions close when the WATERMARK
+    * passes last-event + gap (`StreamOps.sessionizeEventTime`), so
+    * after the flush sentinel pushes the watermark past every armed
+    * timeout, the sink holds EVERY session — including each user's
+    * final one, which the successor-closed replay above structurally
+    * cannot emit. The oracle is therefore the full batch sessionize
+    * restatement, no exclusions.
+    */
   def timeoutSessionReplay(s: SparkSession, dir: String,
                            nBatches: Int = 4): DataFrame = withReplayConf(s) {
     implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
@@ -504,14 +504,6 @@ object StreamReplay {
     finish(s, nm, q).filter(col("event_type") =!= "__flush__")
   }
 
-  /** W242 gate: streaming CDC apply. Every key's snapshot is re-emitted
-    * whenever it changes (update mode); the drained stream's LAST
-    * emission per key — the live row — must equal the batch
-    * `latest_snapshot` compaction exactly, which is the oracle. The
-    * last emission is selected by the same (ep, event_id) version
-    * order the operator folds with, so the replay adds no tiebreak of
-    * its own.
-    */
   /** W264 gate: per-user token-bucket rate limiting. The drained
     * append-mode sink (events that PASSED the throttle, with tokens
     * remaining) equals the oracle's per-user recursive token-bucket
@@ -535,6 +527,14 @@ object StreamReplay {
       finish(s, nm, q).orderBy("user_id", "ep", "event_id")
     }
 
+  /** W242 gate: streaming CDC apply. Every key's snapshot is re-emitted
+    * whenever it changes (update mode); the drained stream's LAST
+    * emission per key — the live row — must equal the batch
+    * `latest_snapshot` compaction exactly, which is the oracle. The
+    * last emission is selected by the same (ep, event_id) version
+    * order the operator folds with, so the replay adds no tiebreak of
+    * its own.
+    */
   def cdcReplay(s: SparkSession, dir: String,
                 nBatches: Int = 4): DataFrame = withReplayConf(s) {
     implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext

@@ -17,26 +17,6 @@ class Round5BatchCPlanSpec extends SparkSpec {
     p
   }
 
-  test("lof_audit: centroids broadcast, probes shuffle") {
-    val p = plan(Similarity.lofAudit(spark, sf))
-    assert(p.contains("BroadcastExchange"),
-      "the 16-centroid table must broadcast")
-    assert(p.contains("ShuffledHashJoin") || p.contains("SortMergeJoin"),
-      "the n-proportional probe join must shuffle on centroid_id")
-    assert(!p.contains("CartesianProduct"))
-  }
-
-  test("mutual_nn_pairs: the mutuality check is an equality self-join") {
-    // the top-1 table is localCheckpoint-ed, so the candidate stage's
-    // broadcasts are upstream of the visible plan; what this pins is
-    // the reversed-key self-join shape on the checkpointed table
-    val p = plan(Similarity.mutualNnPairs(spark, sf))
-    assert(!p.contains("CartesianProduct"))
-    assert(p.contains("ShuffledHashJoin") || p.contains("SortMergeJoin")
-      || p.contains("BroadcastHashJoin"),
-      "mutuality must join on the reversed (query, vec) key")
-  }
-
   test("k_truss: every wedge/restrict join is an equality join") {
     val p = plan(Graph.kTruss(spark, sf))
     assert(!p.contains("CartesianProduct"))

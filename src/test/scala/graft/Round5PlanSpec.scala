@@ -14,17 +14,6 @@ class Round5PlanSpec extends SparkSpec {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  test("knn_label_consistency: centroids broadcast, probes do NOT") {
-    val p = plan(Similarity.knnLabelConsistency(spark, sf))
-    assert(p.contains("BroadcastExchange"),
-      "the 16-centroid table must broadcast")
-    // the n-proportional probe table must reach candidates through a
-    // shuffled equality join on the centroid key
-    assert(p.contains("ShuffledHashJoin") || p.contains("SortMergeJoin"),
-      s"probe join must shuffle on centroid_id, not broadcast:\n$p")
-    assert(!p.contains("CartesianProduct"))
-  }
-
   test("rrf_fusion: ranked lists fuse by equality join, no cartesian") {
     val p = plan(Index.rrfFusion(spark, sf))
     // (the 1-row corpus-stats scalar broadcast appears as a

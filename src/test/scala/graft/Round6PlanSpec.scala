@@ -73,14 +73,6 @@ class Round6PlanSpec extends SparkSpec {
     assert(!pf.contains("CartesianProduct"))
   }
 
-  test("nprobe sweep: centroids broadcast, probe join bounded") {
-    val p = plan(Similarity.nprobeRecallSweep(spark, sf))
-    assert(p.contains("BroadcastExchange"),
-      "the 16-centroid and bounded-query tables must broadcast")
-    assert(!p.contains("CartesianProduct"))
-    noConditionedBnlj(p, "nprobe_sweep")
-  }
-
   test("band sweep / containment: equality bucket joins only") {
     Seq(plan(Dedup.lshBandSweep(spark, sf)),
         plan(Dedup.docContainment(spark, sf))).foreach { p =>

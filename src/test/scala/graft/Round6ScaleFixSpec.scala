@@ -17,23 +17,6 @@ class Round6ScaleFixSpec extends SparkSpec {
     p
   }
 
-  test("intrinsic_dimension: centroids broadcast, probe join shuffles," +
-    " no full-corpus broadcast") {
-    val p = plan(Similarity.intrinsicDimension(spark, sf))
-    assert(p.contains("BroadcastExchange"),
-      "the 16-centroid table must broadcast")
-    assert(p.contains("ShuffledHashJoin") || p.contains("SortMergeJoin"),
-      "the n-proportional probe join must shuffle on centroid_id")
-    assert(!p.contains("CartesianProduct"))
-    // the only nested-loop joins allowed are unconditioned Cross
-    // broadcasts of BOUNDED frames (16-row centroids, 1-row scalars);
-    // the r5 shape was a conditioned Inner BNLJ against the WHOLE
-    // broadcast embedding table (`NOT (vec_id = qid)`)
-    p.linesIterator.filter(_.contains("BroadcastNestedLoopJoin"))
-      .foreach(l => assert(l.contains("Cross"),
-        s"conditioned nested-loop join — full-corpus broadcast? $l"))
-  }
-
   test("intrinsic_dimension: IVF candidates keep the 1-d curve reading" +
     " low-dimensional") {
     val dir = java.nio.file.Files.createTempDirectory("twonn6").toString
