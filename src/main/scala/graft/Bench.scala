@@ -134,8 +134,11 @@ object Bench {
   /** Absorb session/codegen warmup so the first measured query of a
     * chunk isn't charged for context startup or first-JIT. The full
     * tour (tokenizer + both iterative-loop shapes) only pays off once
-    * — codegen caches JVM-wide — so later chunks warm the new
-    * CONTEXT's scan/shuffle path with the parquet count alone. */
+    * — JIT-compiled code lives JVM-wide — so later chunks warm the new
+    * CONTEXT's scan/shuffle path with the parquet count alone. Janino's
+    * class cache is JVM-wide too, but it holds only 100 classes and the
+    * tour's carry codegen stage ids (it reads no `Tables` file), so a
+    * later query reuses one of them only by chance. */
   private def warmup(spark: SparkSession, sfDir: String,
                      full: Boolean): Unit = {
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()

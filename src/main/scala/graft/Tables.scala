@@ -15,8 +15,28 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+  /** Every operator reads its tables here, so this is also where the
+    * engine's session gets its one codegen setting.
+    *
+    * Spark names each whole-stage-codegen class after the stage's
+    * position in its plan (`GeneratedIteratorForCodegenStage<N>`), and
+    * the name is part of the generated source that keys Janino's
+    * 100-entry class cache. The same pipeline therefore got a fresh key
+    * in loop round 1, in round k and in the final action: a warm
+    * graph_iter pass compiled 132–145 classes (1.2 s of Janino time)
+    * over the same four queries every pass. With
+    * `useIdInClassName=false` identical pipelines share one class across
+    * rounds, plans and queries: 37–39 compiles per pass, and on 4 cores
+    * graph_iter's cpu_s median went 18.56→14.93 s (perfbench, ten
+    * interleaved pairs). Spark reads the flag when a plan executes, and
+    * the caller's action runs outside any operator, so it has to be a
+    * session setting: scoping it to a loop (`Graph.withLoopConf`)
+    * gained nothing.
+    */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
     spark.read.parquet(s"$dir/$name.parquet")
+  }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

@@ -233,7 +233,10 @@ object Graph {
       // feed the scalars back through a broadcast 1-row LocalRelation,
       // NOT as literals: literals are baked into generated code, so a
       // fresh class would compile every iteration; broadcast-side values
-      // stay out of the source text and the codegen cache keeps hitting.
+      // stay out of the source text, so every round generates the same
+      // source. It compiles once only if class names carry no codegen
+      // stage id (`Tables.load` sets that on the session) and the class
+      // stays in Janino's 100-entry cache between rounds.
       // Broadcasting a LocalRelation is driver-side — no job.
       val got = obs.get
       // null metric = no mass arrived anywhere (fully dangling graph)
@@ -1332,8 +1335,10 @@ object Graph {
     // OPTIMIZATION r11 (guide §4): the step index rides the carried
     // `step` column ((step + 1) everywhere the former code baked the
     // loop variable `t` in as a literal), so all `steps` rounds share
-    // ONE generated-code shape and janino compiles it once. Identical
-    // integers: step + 1 == t on every row of the round's frontier.
+    // ONE generated source. Janino compiles it once when class names
+    // carry no codegen stage id (`Tables.load`) and the 100-entry class
+    // cache keeps it. Identical integers: step + 1 == t on every row of
+    // the round's frontier.
     for (_ <- 1 to steps) {
       val z0 = pmod(col("node") * lit(1000003L) +
         (col("step") + lit(1L)) * lit(999983L) + col("dst"),
@@ -2327,7 +2332,9 @@ object Graph {
     // literals baked into the plan (`isin(...)`, `=== seed`) — literal
     // churn re-generated and re-compiled every stage's codegen each
     // round; data-side values keep the generated source identical, so
-    // janino compiles the round shape once. Same rows, same arithmetic.
+    // janino compiles the round shape once, given class names without a
+    // codegen stage id (`Tables.load`) and room in its 100-entry class
+    // cache. Same rows, same arithmetic.
     withLoopConf(s, p) {
       for (round <- 1L to k) {
         val scores = e.join(va.withColumnRenamed("id", "src"), "src")

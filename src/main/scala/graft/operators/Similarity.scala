@@ -1193,7 +1193,10 @@ object Similarity {
       lit(1e9) + lit(0.5)).cast("long")
     val wTop = Window.partitionBy("query_id")
       .orderBy(col("di"), col("vec_id"))
-    val topk = CacheScope.track(candidates(invertedLists(emb, cent),
+    // `topk` and `lrdg` are each read by concurrent subtrees of the
+    // final action: materialize both before it, or each subtree builds
+    // them again (a stampede)
+    val topk = CacheScope.register(candidates(invertedLists(emb, cent),
       probes.hint("shuffle_hash"))
       .select(col("query_id"), col("vec_id"), di.as("di"))
       .withColumn("rn", row_number().over(wTop))
@@ -1206,7 +1209,7 @@ object Similarity {
       .groupBy("query_id")
       .agg(count(lit(1)).as("kn"),
         (sum(greatest(col("di"), col("kd"))) + lit(1L)).as("sreach"))
-    val lrdg = CacheScope.track(sr.select(col("query_id"), col("kn"),
+    val lrdg = CacheScope.register(sr.select(col("query_id"), col("kn"),
       col("sreach"),
       floor(col("kn").cast("double") / col("sreach") * lit(1e12) +
         lit(0.5)).cast("long").as("lrdg"))

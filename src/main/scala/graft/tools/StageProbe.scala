@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
@@ -16,9 +17,10 @@ import org.apache.spark.sql.SparkSession
   *    records written and the stage name (callsite);
   *  - a `[q]` line per pass with the query's totals: wall seconds,
   *    jobs, duplicate stages, task run/CPU/GC milliseconds, shuffle
-  *    bytes and records written. A duplicate stage is submitted while
-  *    another in-flight stage is still building one of its persisted
-  *    RDDs: both compute it (a cache stampede).
+  *    bytes and records written, and the classes Janino compiled with
+  *    their milliseconds (driver and executor alike). A duplicate stage
+  *    is submitted while another in-flight stage is still building one
+  *    of its persisted RDDs: both compute it (a cache stampede).
   *
   * Usage: `SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=... sbt "runMain
   * graft.tools.StageProbe q1 q2 ..."` (defaults: sf0.1, 32 cores).
@@ -27,6 +29,16 @@ object StageProbe {
   private final class Totals {
     val jobs, dups, runMs, cpuNs, gcMs, shuffleBytes, shuffleRecords = new AtomicLong
     def all: Seq[AtomicLong] = Seq(jobs, dups, runMs, cpuNs, gcMs, shuffleBytes, shuffleRecords)
+  }
+
+  /** Janino compiles so far in this JVM and their milliseconds. The
+    * histogram's reservoir holds every sample until it overflows; past
+    * that its sum is scaled up to the full count. */
+  private def codegen(): (Long, Double) = {
+    val h = CodegenMetrics.METRIC_COMPILATION_TIME
+    val n = h.getCount
+    val v = h.getSnapshot.getValues
+    (n, if (v.isEmpty) 0.0 else v.map(_.toDouble).sum * n / v.length)
   }
 
   def main(args: Array[String]): Unit = {
@@ -81,6 +93,7 @@ object StageProbe {
     for (n <- args; pass <- Seq("cold", "warm")) {
       println(s"===== $n/$pass =====")
       t.all.foreach(_.set(0L))
+      val (c0, ms0) = codegen()
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(n)(s, dir).count()
       val wall = (System.nanoTime() - t0) / 1e9
@@ -89,11 +102,13 @@ object StageProbe {
       s.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
       Thread.sleep(1200) // let the listener bus drain (no public flush)
+      val (c1, ms1) = codegen()
       println(f"[q] $n%-28s $pass%-4s wall=$wall%7.2f s jobs=${t.jobs.get}%4d " +
         f"dup=${t.dups.get}%3d " +
         f"run=${t.runMs.get}%8d ms cpu=${t.cpuNs.get / 1000000L}%8d ms " +
         f"gc=${t.gcMs.get}%6d ms shuffleWrite=${t.shuffleBytes.get}%12d B " +
-        f"records=${t.shuffleRecords.get}%10d")
+        f"records=${t.shuffleRecords.get}%10d " +
+        f"compiles=${c1 - c0}%4d compile=${ms1 - ms0}%7.0f ms")
     }
     s.stop()
   }
