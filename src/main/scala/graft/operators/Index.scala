@@ -222,7 +222,11 @@ object Index {
     * path — the reference's build-index-then-interactively-retrieve
     * flow (`BuildInvertedIndexHBase` → `BooleanRetrievalHBase`) end to
     * end. Output (term, doc_id, tf) rows, driver-assembled from the
-    * fetched postings exactly like the reference's query client.
+    * fetched postings exactly like the reference's query client. Each
+    * term present in the corpus costs one single-task job reading the
+    * one store file whose footer range holds it; an absent term that
+    * falls outside every file's range costs none (see
+    * [[graft.sources.TermStore.parquetBacked]]).
     */
   def termStoreLookup(s: SparkSession, dir: String,
                       terms: Seq[String] = Seq("spark", "data")): DataFrame = {

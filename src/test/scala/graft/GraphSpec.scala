@@ -7,7 +7,8 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
-  SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+  SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec,
   FilterExec, InputAdapter, ProjectExec, QueryExecution, SparkPlan,
@@ -45,11 +46,12 @@ object SeqPPR {
   }
 }
 
-/** What the cluster did while a body ran: jobs started, stages that
-  * read files, and the executed plan of every query execution (actions
-  * and checkpoints). */
+/** What the cluster did while a body ran: jobs started, tasks ended,
+  * stages that read files, and the executed plan of every query
+  * execution (actions and checkpoints). */
 final class JobProbe extends SparkListener with QueryExecutionListener {
   val jobs = new AtomicInteger
+  val tasks = new AtomicInteger
   val fileScanStages = new AtomicInteger
   val plans = new ConcurrentLinkedQueue[SparkPlan]
   private val open = new AtomicInteger
@@ -61,6 +63,9 @@ final class JobProbe extends SparkListener with QueryExecutionListener {
   }
   override def onJobEnd(j: SparkListenerJobEnd): Unit = {
     open.decrementAndGet(); touch()
+  }
+  override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+    tasks.incrementAndGet(); touch()
   }
   override def onStageCompleted(st: SparkListenerStageCompleted): Unit = {
     if (st.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
@@ -320,6 +325,18 @@ class GraphSpec extends SparkSpec {
       assert(plans.size > 3, s"$name: only ${plans.size} plans seen")
       assert(plans.map(PlanShape.broadcastsOfCached).sum == 0,
         s"$name broadcasts a cached relation")
+    }
+  }
+
+  test("collecting hits_scores runs one job over its checkpointed vectors") {
+    val df = Graph.hits(spark, sf)
+    val p = new JobProbe().run(spark)(df.collect())
+    assert(p.jobs.get == 1, s"${p.jobs.get} jobs to collect hits_scores")
+    val plans = p.plans.asScala.toSeq
+    assert(plans.nonEmpty, "the probe must see the collect's plan")
+    plans.foreach { plan =>
+      assert(PlanShape.ownExchanges(plan).isEmpty, s"an exchange in\n$plan")
+      assert(!plan.toString.contains("might_contain"), s"a bloom filter in\n$plan")
     }
   }
 

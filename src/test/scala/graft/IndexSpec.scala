@@ -1,8 +1,36 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, max, min}
+
 import graft.operators.Index
+import graft.sources.TermStore
 
 class IndexSpec extends SparkSpec {
+
+  /** A fresh directory holding `postingsLists` written as a store. */
+  private def storeOf(postingsLists: DataFrame,
+                      write: (DataFrame, String) => Unit = TermStore.write(_, _)): String = {
+    val p = java.nio.file.Files.createTempDirectory("ts").toString
+    write(postingsLists, p)
+    p
+  }
+
+  /** Each store file's (min, max) term, in term order. */
+  private def fileRanges(path: String): Seq[(String, String)] =
+    spark.read.parquet(path).groupBy(col("_metadata.file_path"))
+      .agg(min("term"), max("term")).collect()
+      .map(r => (r.getString(1), r.getString(2))).toSeq.sortBy(_._1)
+
+  /** The corpus' postings lists written as a store, shared by the tests
+    * that only read it. */
+  private lazy val corpusStore: String = storeOf(Index.postingsLists(spark, sf))
+
+  /** The corpus' postings per term, doc-id sorted. */
+  private lazy val expected: Map[String, Seq[(Long, Long)]] =
+    Index.postings(spark, sf).collect().toSeq
+      .groupBy(_.getAs[String]("term"))
+      .map { case (t, rs) => t -> rs.map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("tf"))).sortBy(_._1) }
 
   test("postfix evaluator: AND is intersection, OR is union (tiny corpus)") {
     import spark.implicits._
@@ -35,6 +63,60 @@ class IndexSpec extends SparkSpec {
     assert(store.fetchPostings("zzz_no_such_term_zzz").isEmpty)
     assert(store.fetchDocumentSet("zzz_no_such_term_zzz").isEmpty)
     store.close()
+  }
+
+  test("TermStore answers every vocabulary term with its Index.postings list") {
+    val store = TermStore.parquetBacked(spark, corpusStore)
+    assert(expected.size > 10)
+    expected.foreach { case (t, ps) => assert(store.fetchPostings(t) == ps, t) }
+  }
+
+  test("a present term runs one job, with one task per file whose range holds it") {
+    // range-partitioned: one file's range holds each term; repartitioned
+    // round-robin: the ranges overlap
+    val stores = Seq(corpusStore, storeOf(Index.postingsLists(spark, sf),
+      (df, p) => df.repartition(3).write.mode("overwrite").parquet(p)))
+    val candidates = stores.map { path =>
+      val store = TermStore.parquetBacked(spark, path)
+      val ranges = fileRanges(path)
+      val vocabulary = expected.keys.toSeq.sorted
+      Seq(vocabulary.head, vocabulary(vocabulary.size / 2), vocabulary.last).map { t =>
+        val files = ranges.count { case (lo, hi) => lo <= t && t <= hi }
+        var got: Seq[(Long, Long)] = Nil
+        val p = new JobProbe().run(spark) { got = store.fetchPostings(t) }
+        assert(got == expected(t), t)
+        assert(p.jobs.get == 1 && p.tasks.get == files,
+          s"$t: ${p.jobs.get} jobs, ${p.tasks.get} tasks over $files candidate files")
+        files
+      }
+    }
+    assert(candidates.head.forall(_ == 1) && candidates.last.max > 1, candidates.toString)
+  }
+
+  test("a term below, above or between the files' ranges answers empty with no job") {
+    val ranges = fileRanges(corpusStore)
+    assert(ranges.size > 1, "the fixture store must span several files")
+    val store = TermStore.parquetBacked(spark, corpusStore)
+    // "\u0000" sorts below every other character, so max + "\u0000" lies
+    // above one file's range and below the next one's
+    val probes = Seq("", ranges.last._2 + "a") ++ ranges.init.map(_._2 + "\u0000")
+    assert(probes.forall(t => !expected.contains(t)))
+    var got = Seq.empty[Seq[(Long, Long)]]
+    val p = new JobProbe().run(spark) { got = probes.map(store.fetchPostings) }
+    assert(got.forall(_.isEmpty), probes.zip(got).toString)
+    assert(p.jobs.get == 0, s"${p.jobs.get} jobs for ${probes.size} absent terms")
+  }
+
+  test("a store reopened after a rewrite returns the new postings") {
+    val path = storeOf(Index.postingsLists(spark, sf))
+    val old = TermStore.parquetBacked(spark, path)
+    val (t, ps) = expected.head
+    assert(old.fetchPostings(t) == ps)
+    TermStore.write(spark.range(1).selectExpr("'zzz_new_term' AS term", "1L AS df",
+      "array(named_struct('doc_id', 42L, 'tf', 7L)) AS postings"), path)
+    val reopened = TermStore.parquetBacked(spark, path)
+    assert(reopened.fetchPostings("zzz_new_term") == Seq((42L, 7L)))
+    assert(reopened.fetchPostings(t).isEmpty)
   }
 
   test("df equals number of docs in posting list") {
